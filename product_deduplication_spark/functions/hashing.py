@@ -53,17 +53,6 @@ def splitmix64(x: np.ndarray) -> np.ndarray:
     return z
 
 
-@_wraparound
-def hash_bytes(data: bytes) -> int:
-    """FNV-1a-style 64-bit hash of a byte string (scalar, deterministic)."""
-    h = np.uint64(0xCBF29CE484222325)
-    if data:
-        arr = np.frombuffer(data, dtype=np.uint8).astype(np.uint64)
-        for b in arr:  # only used for short strings (tokens); batched paths below
-            h = ((h ^ b) * _FNV_PRIME) & _U64_MAX
-    return int(splitmix64(np.array([h], dtype=np.uint64))[0])
-
-
 def _to_shingle32(h64: np.ndarray) -> np.ndarray:
     """64-bit mixed shingle hashes → sorted unique uint32 set (high bits).
 

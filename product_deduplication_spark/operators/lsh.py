@@ -29,9 +29,10 @@ Skew strategy (SURVEY.md §4.1):
      pages: identical signature → identical secondary hash) star through
      their min-id hub: O(n) edges, and because a still-hot *sub*-bucket
      means members share two independent bands, the hub is overwhelmingly a
-     true duplicate — the star verifies. The groupBy producing the hub is a
-     plain min() agg that partial-aggregates map-side; the hot key never
-     concentrates rows on one reducer.
+     true duplicate — the star verifies. The hub is a ``min()`` over a
+     window partitioned by the bucket key, so every row of a hot bucket
+     lands on ONE reducer: O(bucket) rows on that task, but O(n) edges out
+     instead of O(n^2) pairs.
 
 Delta mode (``delta_ids``): restrict candidate generation to pairs touching
 a given set of new documents — only buckets containing >= 1 new doc are

@@ -3,14 +3,17 @@
 Replaces the reference's per-row ``fuzz.token_sort_ratio`` apply
 (``reference/static.py:203-215``, SURVEY.md V4) — instead of a Python loop we
 join candidate pairs back to per-doc shingle arrays and compute
-``size(array_intersect)/size(array_union)`` inside whole-stage codegen.
+``|A ∩ B| / (|A| + |B| - |A ∩ B|)`` (``array_intersect`` + ``size``) inside
+whole-stage codegen.
 Precision after this stage is exactly 1.0 w.r.t. the Jaccard threshold, so
 end-to-end recall is determined solely by candidate generation (LSH S-curve).
 
-Scale: two shuffles (sort-merge joins pairs↔features on long keys). The
-features projection carries only (doc_id, shingles) — column pruning keeps
-text/html out of the shuffle. Optional per-doc candidate cap reproduces the
-reference's ntop=25 (``reference/static.py:194``) via a rank window.
+Scale: three sort-merge joins of pairs↔features on long keys with the
+MinHash prefilter on (two without it; see :func:`verify_pairs`). The
+feature projections carry only doc_id, 32-bit signatures and shingles —
+column pruning keeps text/html out of the shuffle. Optional per-doc
+candidate cap reproduces the reference's ntop=25
+(``reference/static.py:194``) via a rank window.
 """
 
 from __future__ import annotations
@@ -30,43 +33,6 @@ def _sig32(col):
     faces the exact check, which alone decides the output."""
     return F.transform(
         col, lambda x: x.bitwiseAND(F.lit(0x7FFFFFFF)).cast("int")
-    )
-
-
-def minhash_estimate_prefilter(
-    pairs: DataFrame, features: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
-) -> DataFrame:
-    """Drop candidates whose MinHash-estimated Jaccard is far below the
-    threshold BEFORE shipping full shingle arrays into the verify join.
-
-    Signatures are ~10x smaller than shingle sets (126 longs vs ~1.2k for a
-    web page), so this turns the verify join from O(candidates x set_size)
-    into O(candidates x sig_len) + O(survivors x set_size). The margin makes
-    the drop probability for a true >= threshold pair < 1e-11 (7 sigma at
-    126 hashes) — recall is preserved; exactness (precision) is untouched
-    because survivors still get the exact Jaccard check.
-    """
-    if cfg.prefilter_margin is None:
-        return pairs
-    sig = features.select(
-        F.col(id_col).alias("_sid"), _sig32(F.col("minhash")).alias("_sig")
-    )
-    a = sig.withColumnRenamed("_sid", "src").withColumnRenamed("_sig", "_sig_a")
-    b = sig.withColumnRenamed("_sid", "dst").withColumnRenamed("_sig", "_sig_b")
-    est = F.aggregate(
-        F.zip_with("_sig_a", "_sig_b", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ) / F.lit(cfg.num_hashes)
-    cutoff = max(0.0, cfg.jaccard_threshold - cfg.prefilter_margin)
-    # merge hints: the signature sides grow with the corpus — never allow
-    # a (mis-estimated) broadcast of them (measured: a static broadcast of
-    # an array-carrying features relation aborted the driver at 370k docs)
-    return (
-        pairs.join(a.hint("merge"), "src")
-        .join(b.hint("merge"), "dst")
-        .where(est >= F.lit(cutoff))
-        .select("src", "dst")
     )
 
 
@@ -111,8 +77,9 @@ def verify_pairs(
             lambda acc, x: acc + x,
         ) / F.lit(cfg.num_hashes)
         cutoff = max(0.0, cfg.jaccard_threshold - cfg.prefilter_margin)
-        # merge hints: see minhash_estimate_prefilter — the feature sides
-        # grow with the corpus and must never be (mis-estimate) broadcast
+        # merge hints: the feature sides grow with the corpus — never allow
+        # a (mis-estimated) broadcast of them (measured: a static broadcast of
+        # an array-carrying features relation aborted the driver at 370k docs)
         joined = (
             pairs.join(sig_a.hint("merge"), "src")
             .join(b_side.hint("merge"), "dst")

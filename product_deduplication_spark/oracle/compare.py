@@ -8,8 +8,6 @@ oracle mismatches are caught locally before the round's CORRECTNESS run.
 
 from __future__ import annotations
 
-import math
-
 import duckdb
 import pandas as pd
 
@@ -64,7 +62,3 @@ def compare_frames(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> list[str]
                 idx = eq.idxmin()
                 problems.append(f"col {c}: first diff at row {idx}: {av[idx]!r} vs {bv[idx]!r}")
     return problems
-
-
-def _is_nan(v) -> bool:
-    return isinstance(v, float) and math.isnan(v)

@@ -40,6 +40,15 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Let AQE coalesce (and skew-split) exchanges INSIDE persisted plans.
+        # Off by default, a cached plan keeps its exchanges at the static
+        # shuffle-partition count so its output partitioning stays fixed
+        # for consumers. Every pipeline persists its features, LSH bucket
+        # relations and CC mapping, so a 20-doc batch would run
+        # shuffle_partitions tasks per cached stage, 8 Arrow-UDF tasks for
+        # 20 rows behind with_features' rebalance instead of 1. Consumers
+        # plan their own exchanges on top either way.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")

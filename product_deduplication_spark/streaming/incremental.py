@@ -225,17 +225,23 @@ def incremental_dedup(
             F.col("doc_id").alias("src"), F.col("cluster_id").alias("dst")
         )
 
-    # feature reuse: hash ONLY the new docs
-    new_feats = with_features(truly_new.select("doc_id", "text"), cfg).select(
-        "doc_id", "shingles", "minhash", "simhash", "bands"
-    )
-    feats = new_feats if old_feats is None else old_feats.unionByName(new_feats)
     # every cache this batch creates (features + candidate_pairs internals)
     # is released before returning — a streaming job runs this once per
     # micro-batch in one long-lived session, so leaked CacheManager entries
     # would accumulate unboundedly (see caching.py)
     scope = CacheScope()
-    feats = scope.persist(feats)
+    # feature reuse: hash ONLY the new docs. Persisted on its own so the
+    # FEATURES snapshot write below reads the cache instead of running the
+    # Arrow UDF a second time
+    new_feats = scope.persist(
+        with_features(truly_new.select("doc_id", "text"), cfg).select(
+            "doc_id", "shingles", "minhash", "simhash", "bands"
+        )
+    )
+    feats = (
+        new_feats if old_feats is None
+        else scope.persist(old_feats.unionByName(new_feats))
+    )
 
     # exact short circuit (V11): cheap sha2 equality, no LSH needed for hits.
     # Delta-restricted like LSH: only hash groups containing a new doc emit
@@ -273,13 +279,17 @@ def incremental_dedup(
         edges = edges.unionByName(prior_edges)
     # _text_len below the label join: keeps the text payload out of the
     # join exchange (this select prunes it from the window already)
-    clusters = pick_winners(
-        assign_clusters(
-            all_docs.withColumn("_text_len", F.length("text")),
-            edges.dropDuplicates(["src", "dst"]),
-            "doc_id",
+    clusters = (
+        pick_winners(
+            assign_clusters(
+                all_docs.withColumn("_text_len", F.length("text")),
+                edges.dropDuplicates(["src", "dst"]),
+                "doc_id",
+            )
         )
-    ).select("url", "doc_id", "cluster_id", "is_winner")
+        .drop("_text_len")
+        .select("url", "doc_id", "cluster_id", "is_winner")
+    )
 
     # the CLUSTERS delta: new docs + old docs whose assignment or winner
     # flag changed (a new doc can bridge two old clusters or unseat an old
@@ -308,15 +318,16 @@ def incremental_dedup(
     # (harmless extras if the batch dies here), CLUSTERS next, DOCS last as
     # the commit marker that flips the batch to "processed"
     fmt = {"format": FORMAT_VERSION}
-    catalog.write_stage(new_feats, FEATURES_STAGE, metrics=fmt)
+    # new_feats has exactly one row per truly_new doc: its written row count
+    # is the batch's new-doc count, without re-running the anti-join over
+    # every DOCS snapshot for a truly_new.count()
+    new_count = catalog.write_stage(new_feats, FEATURES_STAGE, metrics=fmt)["rows"]
     catalog.write_stage(
         delta_clusters,
         CLUSTERS_STAGE,
         metrics=fmt | {"bootstrap": bootstrap, "batch_seq": batch_seq},
     )
-    catalog.write_stage(
-        truly_new, DOCS_STAGE, metrics=fmt | {"new_docs": truly_new.count()}
-    )
+    catalog.write_stage(truly_new, DOCS_STAGE, metrics=fmt | {"new_docs": new_count})
     scope.release()
     if auto_compact is not None:
         active = catalog.active_snapshots(CLUSTERS_STAGE)

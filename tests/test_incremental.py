@@ -12,7 +12,7 @@ from product_deduplication_spark.config import DedupConfig
 from product_deduplication_spark.datagen import generate_web_documents
 from product_deduplication_spark.oracle.brute_force import clusters_to_pairs
 from product_deduplication_spark.pipeline import run_dedup
-from product_deduplication_spark.streaming.incremental import incremental_dedup
+from product_deduplication_spark.streaming.incremental import DOCS_STAGE, incremental_dedup
 
 CFG = DedupConfig(shuffle_partitions=8)
 
@@ -52,6 +52,9 @@ def test_incremental_idempotent_on_resubmission(spark, tmp_path, corpus):
     c2 = incremental_dedup(spark, cat, spark.createDataFrame(batch1[["url", "text"]]), CFG)
     assert c2.count() == n1
     assert _partition_pairs(c2.collect()) == p1
+    # the DOCS manifest counts only the docs each batch actually added
+    new_docs = [e["metrics"]["new_docs"] for e in cat.snapshots(DOCS_STAGE)]
+    assert new_docs == [len(batch1), 0]
 
 
 def test_three_batches_cross_batch_near_dup(spark, tmp_path):

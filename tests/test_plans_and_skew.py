@@ -8,6 +8,7 @@ O(n^2) pairs.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -303,13 +304,15 @@ def test_no_forced_broadcast_of_corpus_sides_across_operators(spark):
 
 
 def _exchange_blocks(plan: str) -> list[str]:
-    """Detail blocks of the formatted plan belonging to Exchange nodes."""
+    """Detail blocks of the formatted plan belonging to Exchange nodes,
+    shuffle and broadcast alike: a broadcast side carrying ``text`` would
+    ship the payload to every executor."""
     blocks, cur, keep = [], [], False
     for ln in plan.splitlines():
         if ln.startswith("(") and ") " in ln:
             if keep and cur:
                 blocks.append("\n".join(cur))
-            keep = ") Exchange" in ln
+            keep = ") Exchange" in ln or ") BroadcastExchange" in ln
             cur = [ln]
         elif cur:
             cur.append(ln)
@@ -359,3 +362,44 @@ def test_winner_orderkey_keeps_text_out_of_exchanges(spark, sf_dir):
     )
     want = sorted(wide.where("is_winner").select("cluster_id", "url").collect())
     assert got == want and len(got) == 7
+
+
+def test_exchange_blocks_include_broadcasts():
+    plan = (
+        "(1) Scan parquet\nOutput [1]: [text#1]\n"
+        "(2) BroadcastExchange\nInput [1]: [text#1]\n"
+        "(3) Exchange\nInput [1]: [id#2]\n"
+        "(4) BroadcastHashJoin\nLeft keys [1]: [text#1]\n"
+    )
+    blocks = _exchange_blocks(plan)
+    assert [b.splitlines()[0] for b in blocks] == ["(2) BroadcastExchange", "(3) Exchange"]
+
+
+def _persisted_feature_partitions(spark, texts) -> int:
+    cfg = DedupConfig(shuffle_partitions=8)
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
+    )
+    feats = with_features(df, cfg).persist()
+    try:
+        assert feats.count() == len(texts)
+        return feats.rdd.getNumPartitions()
+    finally:
+        feats.unpersist()
+
+
+def test_small_input_runs_one_feature_task(spark):
+    """A 20-doc delta must not fan out to shuffle_partitions Arrow-UDF tasks:
+    each Python task costs far more in worker setup than 20 docs of hashing.
+    The rebalance exchange is coalesced by AQE inside the persisted plan."""
+    texts = [f"delta document {i} with a little text " * 20 for i in range(20)]
+    assert _persisted_feature_partitions(spark, texts) == 1
+
+
+def test_multi_mb_input_still_spreads_feature_work(spark):
+    """Several MB of (incompressible) text in a single-partition input is
+    still split across cores before the Arrow UDF runs."""
+    rng = np.random.default_rng(7)
+    letters = np.array(list("abcdefghijklmnopqrstuvwxyz "))
+    texts = ["".join(rng.choice(letters, 6000)) for _ in range(1000)]
+    assert _persisted_feature_partitions(spark, texts) > 1
