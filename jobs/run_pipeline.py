@@ -82,17 +82,18 @@ def main(argv: list[str] | None = None) -> None:
     )
     done("s1_docs")
 
+    eligible = docs.where(F.length("text") >= cfg.min_doc_chars)  # as run_dedup
     feats = cat.get_or_compute(
         "s2_features",
-        lambda: with_features(
-            docs.where(F.length("text") >= cfg.min_doc_chars).select("doc_id", "text"), cfg
-        ).select("doc_id", "shingles", "minhash", "simhash", "bands"),
+        lambda: with_features(eligible.select("doc_id", "text"), cfg).select(
+            "doc_id", "shingles", "minhash", "simhash", "bands"
+        ),
         metrics={"num_hashes": cfg.num_hashes, "bands": cfg.lsh_bands, "k": cfg.shingle_k},
     )
     done("s2_features")
 
     exact = cat.get_or_compute(
-        "s3_exact", lambda: exact_duplicate_edges(docs, "doc_id", "text")
+        "s3_exact", lambda: exact_duplicate_edges(eligible, "doc_id", "text")
     )
     done("s3_exact")
 
@@ -116,7 +117,8 @@ def main(argv: list[str] | None = None) -> None:
         edges = exact.select("src", "dst").unionByName(verified.select("src", "dst"))
         # _text_len below the label join keeps text out of the join exchange
         return pick_winners(
-            assign_clusters(docs.withColumn("_text_len", F.length("text")), edges, "doc_id")
+            assign_clusters(docs.withColumn("_text_len", F.length("text")), edges, "doc_id"),
+            "_text_len",
         ).select("url", "doc_id", "cluster_id", "is_winner")
 
     clusters = cat.get_or_compute("s6_clusters", _clusters)

@@ -20,41 +20,39 @@ At scale: all exchanges are on long node ids. A hot root (giant component)
 concentrates its O(degree) neighbor rows on one reducer — exactly what the
 former join-back step did — and the per-row work there is a running min,
 never a pairwise blowup.
+
+Small graphs finish on the driver: the loop's per-round job latency is the
+whole cost at a few thousand edges, so up to ``LOCAL_MAX_EDGES`` edges are
+collected and labelled by a numpy union-find. The limit is a constant, not a
+config field: both paths label identically, so it only bounds driver memory
+(about 16 MB of Arrow).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from product_deduplication_spark.caching import CacheScope, persist_in
 
-
-def _canonical(edges: DataFrame) -> DataFrame:
-    """Undirected edge set as (u > v) pairs, no self-loops, distinct."""
-    return (
-        edges.select(
-            F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .dropDuplicates(["u", "v"])
-    )
+# largest canonical edge list that connected_components finishes on the driver
+LOCAL_MAX_EDGES = 1 << 20
 
 
-def _canonical_by_u(edges: DataFrame) -> DataFrame:
-    """_canonical, but partitioned by ``u`` alone: HashPartitioning(u)
-    satisfies the dedup's ClusteredDistribution(u, v) AND the following
-    small-star window's ClusteredDistribution(u), so the dedup and the
-    window share ONE exchange (verified in the plan: Exchange → two
-    HashAggregates → Sort → Window, no second exchange) instead of the
-    dedup exchanging by (u, v) and the window re-exchanging by u."""
-    return (
-        edges.select(
-            F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
-        )
-        .where(F.col("u") != F.col("v"))
-        .repartition("u")
-        .dropDuplicates(["u", "v"])
-    )
+def _canonical(edges: DataFrame, by_u: bool = False) -> DataFrame:
+    """Undirected edge set as (u > v) pairs, no self-loops, distinct.
+
+    ``by_u`` partitions by ``u`` alone: HashPartitioning(u) satisfies the
+    dedup's ClusteredDistribution(u, v) AND the following small-star
+    window's ClusteredDistribution(u), so the dedup and the window share ONE
+    exchange (verified in the plan: Exchange → two HashAggregates → Sort →
+    Window, no second exchange) instead of the dedup exchanging by (u, v)
+    and the window re-exchanging by u."""
+    e = edges.select(
+        F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
+    ).where(F.col("u") != F.col("v"))
+    return (e.repartition("u") if by_u else e).dropDuplicates(["u", "v"])
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -106,12 +104,33 @@ def _is_star_forest(edges: DataFrame) -> bool:
     ).isEmpty()
 
 
+def _local_components(u: np.ndarray, v: np.ndarray) -> pd.DataFrame:
+    """(node, component = min id): hook each edge's larger root to its
+    smaller root, pointer-jump to roots, repeat until no edge joins two
+    roots. O(log n) passes on a chain, where min-label propagation needs one
+    per hop; sorted ``ids`` make the min index the min id."""
+    ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = inv[: len(u)], inv[len(u) :]
+    lab = np.arange(len(ids))
+    while True:
+        ra, rb = lab[a], lab[b]
+        if (ra == rb).all():
+            return pd.DataFrame({"node": ids, "component": ids[lab]})
+        np.minimum.at(lab, np.maximum(ra, rb), np.minimum(ra, rb))
+        while not np.array_equal(nxt := lab[lab], lab):
+            lab = nxt
+
+
 def connected_components(
     edges: DataFrame, max_iter: int = 50, catalog=None
 ) -> DataFrame:
     """Labels (node, component) for every node appearing in ``edges``;
     component = min node id of the component (deterministic labeling,
     mirrors SURVEY.md §5.2 "min-member-id labeled partitions").
+
+    At most ``LOCAL_MAX_EDGES`` canonical edges (or none) are labelled on the
+    driver; more run the large-star/small-star loop, which raises
+    ``RuntimeError`` if not converged after ``max_iter`` rounds.
 
     ``catalog``: optional ``SnapshotCatalog`` — the per-round frontier pin
     then routes through reliable storage (resumable after executor loss on
@@ -123,11 +142,13 @@ def connected_components(
         e = pin(_canonical(edges), catalog, "pin_cc_frontier")
     else:
         e = _canonical(edges).localCheckpoint(eager=True)
-    if e.isEmpty():
-        return edges.sparkSession.createDataFrame([], "node long, component long")
+    small = e.limit(LOCAL_MAX_EDGES + 1).toArrow()
+    if small.num_rows <= LOCAL_MAX_EDGES:
+        labels = _local_components(small["u"].to_numpy(), small["v"].to_numpy())
+        return edges.sparkSession.createDataFrame(labels, "node long, component long")
     prev_n = None
     for _ in range(max_iter):
-        e = _canonical_by_u(_large_star(e))
+        e = _canonical(_large_star(e), by_u=True)
         e = _canonical(_small_star(e))
         if catalog is not None:
             e = pin(e, catalog, "pin_cc_frontier")

@@ -41,16 +41,3 @@ def exact_duplicate_edges(df: DataFrame, id_col: str = "doc_id", text_col: str =
         )
     )
 
-
-def exact_duplicate_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(group_hash, doc_id, group_size) for groups with >1 member — the
-    direct query-surface form (used by __spark_entry__ with a DuckDB oracle).
-    """
-    hashed = df.select(F.col(id_col), F.sha2(F.col(text_col), 256).alias("text_hash"))
-    return (
-        hashed.withColumn(
-            "group_size", F.count("*").over(Window.partitionBy("text_hash"))
-        )
-        .where(F.col("group_size") > 1)
-        .select("text_hash", F.col(id_col), "group_size")
-    )

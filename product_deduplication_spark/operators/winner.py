@@ -129,14 +129,3 @@ def add_entity_names(pairs: DataFrame, entity_names: DataFrame) -> DataFrame:
         .select("winner_entity_uuid", "winner_name", "loser_entity_uuid", "loser_name")
     )
 
-
-def clusters_to_winner_loser(clusters: DataFrame) -> DataFrame:
-    """Reshape cluster assignments (with is_winner) into winner/loser pairs —
-    the reference's group→pairs export (``reference/heuristic_ucpc_dups.py:207-208``)."""
-    winners = clusters.where("is_winner").select(
-        F.col("cluster_id"), F.col("url").alias("winner_url")
-    )
-    losers = clusters.where(~F.col("is_winner")).select(
-        F.col("cluster_id"), F.col("url").alias("loser_url")
-    )
-    return winners.join(losers, "cluster_id").select("winner_url", "loser_url")

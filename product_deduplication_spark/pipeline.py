@@ -71,20 +71,19 @@ def prepare_docs(df: DataFrame, cfg: DedupConfig, validate_extraction: bool = Fa
     return out
 
 
-def pick_winners(clusters: DataFrame) -> DataFrame:
+def pick_winners(clusters: DataFrame, length_col: str | None = None) -> DataFrame:
     """Winner per cluster: longest text, then earliest warc_ts, then min url.
 
     Webtext analog of reference winner selection (W2 group argmax,
     ``reference/winner_selection.py:108-109``).
 
-    Ordering uses a precomputed ``_text_len`` column when the caller provides
-    one (run_dedup tags it on the doc relation BEFORE the cluster-label
-    join): ``length(text)`` referenced only above that join forces the full
+    ``length_col`` names a precomputed ``length(text)`` column (the engine
+    tags ``_text_len`` on the docs BEFORE the cluster-label join):
+    ``length(text)`` referenced only above that join forces the full
     ``text`` payload through the join exchange even for consumers that never
     select it, whereas a length computed below the join lets column pruning
     drop ``text`` (and ``html``) from the shuffle entirely (guide §2.3 —
     shuffle metadata, not payloads). Identical ordering either way."""
-    length_col = "_text_len" if "_text_len" in clusters.columns else None
     order = [F.desc(F.col(length_col) if length_col else F.length("text"))]
     if "warc_ts" in clusters.columns:
         order.append(F.asc("warc_ts"))
@@ -178,7 +177,7 @@ def run_dedup(
         exact.select("src", "dst"), near.select("src", "dst"), "doc_id",
         scope=scope,
     )
-    clustered = pick_winners(clustered).drop("_text_len")
+    clustered = pick_winners(clustered, "_text_len").drop("_text_len")
     return DedupResult(
         docs=docs,
         features=feats,

@@ -252,9 +252,10 @@ def incremental_dedup(
     # corpus-hash relation): per hash group, min/count give the star shape
     # and max(is_new) restricts to groups touching the delta, exactly as
     # the new_hashes semi-join did
-    hashed = all_docs.select("doc_id", F.sha2("text", 256).alias("h")).join(
-        new_ids.withColumn("_n", F.lit(True)), "doc_id", "left"
-    )
+    # run_dedup's eligibility, so NULL and "" texts do not form one class
+    hashed = all_docs.where(F.length("text") >= cfg.min_doc_chars).select(
+        "doc_id", F.sha2("text", 256).alias("h")
+    ).join(new_ids.withColumn("_n", F.lit(True)), "doc_id", "left")
     hw = Window.partitionBy("h")
     exact_edges = (
         hashed.select(
@@ -285,7 +286,8 @@ def incremental_dedup(
                 all_docs.withColumn("_text_len", F.length("text")),
                 edges.dropDuplicates(["src", "dst"]),
                 "doc_id",
-            )
+            ),
+            "_text_len",
         )
         .drop("_text_len")
         .select("url", "doc_id", "cluster_id", "is_winner")

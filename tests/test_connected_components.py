@@ -1,12 +1,19 @@
 """CC correctness vs a union-find oracle (SURVEY.md §5.1: invariant under
-edge permutation; exact component equality)."""
+edge permutation; exact component equality).
+
+connected_components has two paths: small edge lists finish on the driver,
+larger ones run the large-star/small-star loop. ``_run`` labels every graph
+both ways — ``LOCAL_MAX_EDGES`` patched to 0 forces the loop — and requires
+identical labels before any test compares them with its expectation."""
 
 from __future__ import annotations
 
 import random
 
+import numpy as np
 import pytest
 
+from product_deduplication_spark.operators import connected_components as cc
 from product_deduplication_spark.operators.connected_components import (
     assign_clusters,
     connected_components,
@@ -14,10 +21,18 @@ from product_deduplication_spark.operators.connected_components import (
 from product_deduplication_spark.oracle.brute_force import union_find_clusters
 
 
+def _labels(df):
+    return {r["node"]: r["component"] for r in connected_components(df).collect()}
+
+
 def _run(spark, edges):
     df = spark.createDataFrame(edges, "src long, dst long")
-    out = connected_components(df)
-    return {r["node"]: r["component"] for r in out.collect()}
+    driver = _labels(df)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cc, "LOCAL_MAX_EDGES", 0)
+        loop = _labels(df)
+    assert driver == loop
+    return driver
 
 
 def test_cc_simple_chain(spark):
@@ -31,8 +46,25 @@ def test_cc_self_loops_and_duplicates(spark):
 
 
 def test_cc_empty(spark):
-    df = spark.createDataFrame([], "src long, dst long")
-    assert connected_components(df).count() == 0
+    assert _run(spark, []) == {}
+
+
+def test_cc_loop_raises_when_not_converged(spark, monkeypatch):
+    monkeypatch.setattr(cc, "LOCAL_MAX_EDGES", 0)
+    df = spark.createDataFrame([(i, i + 1) for i in range(8)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="did not converge in 1 iterations"):
+        connected_components(df, max_iter=1)
+
+
+def test_local_components_long_shuffled_chain():
+    """Pointer jumping labels a path in O(log n) passes; min-label
+    propagation would need one per hop."""
+    rng = np.random.default_rng(0)
+    order = rng.permutation(5000).astype(np.int64) * 7 - 100
+    u, v = np.maximum(order[1:], order[:-1]), np.minimum(order[1:], order[:-1])
+    labels = cc._local_components(u, v)
+    assert np.array_equal(labels["node"], np.sort(order))
+    assert (labels["component"] == order.min()).all()
 
 
 @pytest.mark.parametrize("seed", [0, 1])
@@ -63,10 +95,11 @@ def test_assign_clusters_includes_singletons(spark):
     assert rows == {1: 1, 2: 1, 99: 99}
 
 
-def test_catalog_backed_pins_match_local_checkpoint(spark, tmp_path):
+def test_catalog_backed_pins_match_local_checkpoint(spark, tmp_path, monkeypatch):
     """Cluster-safe mode: routing the CC frontier and the two-pass id/cumsum
     pins through SnapshotCatalog (reliable storage) must produce output
-    identical to the localCheckpoint fast path."""
+    identical to the localCheckpoint fast path. CC is forced onto the loop,
+    the path that pins a frontier every round."""
     from pyspark.sql import functions as F
 
     from product_deduplication_spark.catalog import SnapshotCatalog
@@ -75,6 +108,7 @@ def test_catalog_backed_pins_match_local_checkpoint(spark, tmp_path):
         ordered_cumsum,
     )
 
+    monkeypatch.setattr(cc, "LOCAL_MAX_EDGES", 0)
     cat = SnapshotCatalog(spark, str(tmp_path / "pins"))
     rng = random.Random(7)
     edges = spark.createDataFrame(

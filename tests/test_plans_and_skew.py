@@ -322,7 +322,7 @@ def _exchange_blocks(plan: str) -> list[str]:
 
 
 def test_winner_orderkey_keeps_text_out_of_exchanges(spark, sf_dir):
-    """pick_winners with a precomputed ``_text_len`` (what run_dedup now
+    """pick_winners ordering by a precomputed ``_text_len`` (what run_dedup
     passes): the text payload must not cross ANY exchange for a consumer
     that doesn't select it — the length is computed below the label join,
     so column pruning drops text from the join and window shuffles. The
@@ -346,7 +346,9 @@ def test_winner_orderkey_keeps_text_out_of_exchanges(spark, sf_dir):
             .drop("node", "component")
         )
 
-    narrow = pick_winners(clusters(docs.withColumn("_text_len", F.length("text"))))
+    narrow = pick_winners(
+        clusters(docs.withColumn("_text_len", F.length("text"))), "_text_len"
+    )
     wide = pick_winners(clusters(docs))
 
     out = narrow.select("cluster_id", "is_winner")
