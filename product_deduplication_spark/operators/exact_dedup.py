@@ -21,18 +21,37 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def exact_duplicate_edges(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_duplicate_edges(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    delta_ids: DataFrame | None = None,
+) -> DataFrame:
     """Edges (src, dst, method='exact', similarity=1.0) linking each doc to
-    the min-id doc with byte-identical text."""
+    the min-id doc with byte-identical text.
+
+    ``delta_ids``: optional one-column DataFrame of node ids considered
+    "new" (as in ``lsh.candidate_pairs``); when given, only the hash classes
+    that contain a new id emit edges. Old-only classes were linked by the
+    batch that formed them; a touched class emits its whole star, since a
+    new doc may become its min-id hub."""
     hashed = df.select(F.col(id_col).alias("node"), F.sha2(F.col(text_col), 256).alias("h"))
     w = Window.partitionBy("h")
+    touched = F.lit(True)
+    if delta_ids is not None:
+        new_nodes = delta_ids.select(
+            F.col(delta_ids.columns[0]).alias("node"), F.lit(True).alias("_n")
+        )
+        hashed = hashed.join(new_nodes, "node", "left")
+        touched = F.max(F.coalesce(F.col("_n"), F.lit(False))).over(w)
     return (
         hashed.select(
             "node",
             F.min("node").over(w).alias("hub"),
             F.count("*").over(w).alias("n"),
+            touched.alias("_touched"),
         )
-        .where((F.col("n") > 1) & (F.col("node") != F.col("hub")))
+        .where(F.col("_touched") & (F.col("n") > 1) & (F.col("node") != F.col("hub")))
         .select(
             F.col("hub").alias("src"),
             F.col("node").alias("dst"),
@@ -40,4 +59,3 @@ def exact_duplicate_edges(df: DataFrame, id_col: str = "doc_id", text_col: str =
             F.lit(1.0).alias("similarity"),
         )
     )
-

@@ -42,8 +42,11 @@ incremental batch from full-corpus cost into delta cost
 Inductive completeness: every (a, b) pair is emitted by the batch that adds
 the younger of a, b.
 
-Band hashes are computed JVM-side with xxhash64 over signature slices —
-whole-stage codegen, no Python round trip.
+Band hashes come precomputed in the features' ``bands`` column: the numpy
+feature kernel (``hashing.band_hashes_from_signatures``) hashes them in the
+same Arrow UDF pass that builds the signature. Only features without that
+column fall back to ``band_hash_array``, xxhash64 over signature slices on
+the JVM.
 
 Bootstrap (``delta_ids=None``) takes a dedicated narrow-relation fast path
 (``_candidate_pairs_bootstrap``): no ``is_new`` column, primitive member

@@ -1,23 +1,28 @@
 """End-to-end near-duplicate pipeline (SURVEY.md §7.1 architecture).
 
 ingest(url, warc_ts, html, text, lang)
-  → s1 normalize: extract_text(html) invariance check, doc_id = xxhash64(url)
-  → s2 exact:     sha2(text) star edges
-  → s3/s4 features: shingles + MinHash + SimHash (one Arrow UDF pass)
-  → s4a LSH band candidates   → s5 verify (exact Jaccard)
-  → s4b SimHash candidates    ↗
-  → s6 cluster: large-star/small-star CC
-  → s8 winner per cluster (longest text, earliest warc_ts tiebreak — webtext
+  → s1_docs:       doc_id = xxhash64(url), optional extract_text(html)
+                   invariance check, html dropped
+  → s2_features:   shingles + MinHash + SimHash (one Arrow UDF pass)
+  → s3_exact:      sha2(text) star edges
+  → s4_candidates: LSH band candidates (+ SimHash candidates)
+  → s5_verified:   exact Jaccard
+  → cluster: contracted CC (exact stars folded into their hubs; graphs up
+       to LOCAL_MAX_EDGES labelled on the driver, larger ones by the
+       large-star/small-star loop)
+  → winner per cluster (longest text, earliest warc_ts tiebreak — webtext
        analog of winner selection, reference/winner_selection.py:108-109)
 
 Mirrors the reference entry point ``groups_creation.main``
 (``reference/groups_creation.py:249-304``) with the substitutions documented
-in SURVEY.md §2. All stages are lazy DataFrames; `run_dedup` triggers them
-and returns the handle dict so callers can persist any stage as a snapshot.
+in SURVEY.md §2. ``run_dedup`` is the one definition of this sequence: the
+stages are lazy DataFrames unless its ``checkpoint`` hook materializes them
+(the spark-submit job snapshots each one through the catalog).
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Window, functions as F
@@ -32,6 +37,9 @@ from product_deduplication_spark.operators.exact_dedup import exact_duplicate_ed
 from product_deduplication_spark.operators.lsh import candidate_pairs
 from product_deduplication_spark.operators.simhash_join import simhash_candidate_pairs
 from product_deduplication_spark.operators.verify import verify_pairs
+
+# run_dedup's stages, in order, as named to its checkpoint hook
+STAGES = ("s1_docs", "s2_features", "s3_exact", "s4_candidates", "s5_verified")
 
 
 @dataclass
@@ -69,6 +77,12 @@ def prepare_docs(df: DataFrame, cfg: DedupConfig, validate_extraction: bool = Fa
             "extraction_ok", F.col("_extracted") == F.col("text")
         ).drop("_extracted")
     return out
+
+
+def eligible_docs(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Docs long enough for the exact and near-dup stages; the rest (NULL
+    and "" texts included) stay singletons."""
+    return docs.where(F.length("text") >= cfg.min_doc_chars)
 
 
 def pick_winners(clusters: DataFrame, length_col: str | None = None) -> DataFrame:
@@ -142,28 +156,42 @@ def run_dedup(
     cfg: DedupConfig | None = None,
     use_simhash: bool = False,
     validate_extraction: bool = False,
+    checkpoint: Callable[[str, Callable[[], DataFrame]], DataFrame] | None = None,
 ) -> DedupResult:
+    """Run the batch pipeline over ``df``.
+
+    ``checkpoint(stage, compute)`` is called once per name in ``STAGES``, in
+    order, and returns that stage's DataFrame; ``compute`` builds it. The
+    default returns ``compute()``, so every stage stays lazy. A catalog's
+    ``get_or_compute`` snapshots each stage instead and resumes from the
+    snapshots already written."""
     cfg = cfg or DedupConfig()
     scope = CacheScope()
-    docs = prepare_docs(df, cfg, validate_extraction=validate_extraction)
-    eligible = docs.where(F.length("text") >= cfg.min_doc_chars)
+    checkpoint = checkpoint or (lambda _stage, compute: compute())
+    docs = checkpoint(
+        "s1_docs",
+        lambda: prepare_docs(df, cfg, validate_extraction=validate_extraction).drop("html"),
+    )
+    eligible = eligible_docs(docs, cfg)
 
-    feats = with_features(
-        eligible.select("doc_id", "text"), cfg, simhash=use_simhash
-    ).select("doc_id", "shingles", "minhash", "simhash", "bands")
-    # features feed 2-3 downstream consumers — cache once (at cluster scale
-    # this stage is persisted as a snapshot table instead, see catalog.py)
-    feats = scope.persist(feats)
+    # features feed 2-3 downstream consumers — cache once
+    feats = scope.persist(checkpoint(
+        "s2_features",
+        lambda: with_features(eligible.select("doc_id", "text"), cfg, simhash=use_simhash)
+        .select("doc_id", "shingles", "minhash", "simhash", "bands"),
+    ))
+    exact = checkpoint("s3_exact", lambda: exact_duplicate_edges(eligible, "doc_id", "text"))
 
-    exact = exact_duplicate_edges(eligible, "doc_id", "text")
+    def candidates() -> DataFrame:
+        pairs = candidate_pairs(feats, cfg, scope=scope)
+        if use_simhash:
+            pairs = pairs.unionByName(simhash_candidate_pairs(feats, cfg)).dropDuplicates(
+                ["src", "dst"]
+            )
+        return pairs
 
-    lsh_pairs = candidate_pairs(feats, cfg, scope=scope)
-    pairs = lsh_pairs
-    if use_simhash:
-        pairs = pairs.unionByName(simhash_candidate_pairs(feats, cfg)).dropDuplicates(
-            ["src", "dst"]
-        )
-    near = verify_pairs(pairs, feats, cfg)
+    pairs = checkpoint("s4_candidates", candidates)
+    near = checkpoint("s5_verified", lambda: verify_pairs(pairs, feats, cfg))
 
     all_edges = exact.unionByName(near).dropDuplicates(["src", "dst"])
     # exact-dup classes are star components already — contract them to their
@@ -171,7 +199,7 @@ def run_dedup(
     # equality with the uncontracted CC is pinned in tests; at web scale the
     # exact stars dominate the edge list)
     # winner ordering key computed BELOW the label join (see pick_winners:
-    # lets count-only consumers prune text/html out of the join exchange)
+    # lets count-only consumers prune text out of the join exchange)
     clustered = assign_clusters_contracted(
         docs.withColumn("_text_len", F.length("text")),
         exact.select("src", "dst"), near.select("src", "dst"), "doc_id",

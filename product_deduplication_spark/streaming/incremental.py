@@ -4,14 +4,16 @@ Capability analog of the reference's canonical upsert
 (``reference/clean_canonical.py:102-209,296-338``, V11 direct-match short
 circuit) at webtext scale:
 
-1. **Exact short circuit** — new docs whose ``sha2(text)`` matches an
-   already-clustered doc join that cluster without any similarity work
-   (V11: "normalized name already a canonical member → link without
-   similarity").
+1. **Exact edges** — ``exact_duplicate_edges`` in delta mode: every
+   ``sha2(text)`` class that contains a new doc emits its star edges, so a
+   byte-identical copy of a clustered doc joins that cluster (V11:
+   "normalized name already a canonical member → link"). The copy still
+   goes through features, LSH and verify like any other new doc.
 2. **Feature reuse** — MinHash/shingles are computed ONLY for genuinely new
-   docs; prior snapshots' features are read back from the catalog. At 10^12
-   docs this is the difference between re-hashing the corpus and hashing
-   the daily delta.
+   docs (those ``eligible_docs`` keeps, as in ``run_dedup``); prior
+   snapshots' features are read back from the catalog. At 10^12 docs this
+   is the difference between re-hashing the corpus and hashing the daily
+   delta.
 3. **Delta-restricted candidates** — LSH banding runs in delta mode
    (``candidate_pairs(..., delta_ids=new ids)``): only buckets touching a
    new doc are considered and only (new, any) pairs are emitted. Old-old
@@ -53,9 +55,10 @@ from product_deduplication_spark.catalog import SnapshotCatalog
 from product_deduplication_spark.config import DedupConfig
 from product_deduplication_spark.functions.features import with_features
 from product_deduplication_spark.operators.connected_components import assign_clusters
+from product_deduplication_spark.operators.exact_dedup import exact_duplicate_edges
 from product_deduplication_spark.operators.lsh import candidate_pairs
 from product_deduplication_spark.operators.verify import verify_pairs
-from product_deduplication_spark.pipeline import pick_winners, prepare_docs
+from product_deduplication_spark.pipeline import eligible_docs, pick_winners, prepare_docs
 
 DOCS_STAGE = "inc_docs"
 FEATURES_STAGE = "inc_features"
@@ -230,11 +233,11 @@ def incremental_dedup(
     # micro-batch in one long-lived session, so leaked CacheManager entries
     # would accumulate unboundedly (see caching.py)
     scope = CacheScope()
-    # feature reuse: hash ONLY the new docs. Persisted on its own so the
-    # FEATURES snapshot write below reads the cache instead of running the
-    # Arrow UDF a second time
+    # feature reuse: hash ONLY the new docs run_dedup would hash. Persisted
+    # on its own so the FEATURES snapshot write below reads the cache
+    # instead of running the Arrow UDF a second time
     new_feats = scope.persist(
-        with_features(truly_new.select("doc_id", "text"), cfg).select(
+        with_features(eligible_docs(truly_new, cfg).select("doc_id", "text"), cfg).select(
             "doc_id", "shingles", "minhash", "simhash", "bands"
         )
     )
@@ -243,36 +246,16 @@ def incremental_dedup(
         else scope.persist(old_feats.unionByName(new_feats))
     )
 
-    # exact short circuit (V11): cheap sha2 equality, no LSH needed for hits.
-    # Delta-restricted like LSH: only hash groups containing a new doc emit
-    # edges (old-old exact edges are already inside prior clusters).
-    new_ids = truly_new.select("doc_id")
-    # one window over the (doc_id, h) relation replaces the former
-    # semi-join + groupBy + join-back chain (4 extra exchanges of the
-    # corpus-hash relation): per hash group, min/count give the star shape
-    # and max(is_new) restricts to groups touching the delta, exactly as
-    # the new_hashes semi-join did
-    # run_dedup's eligibility, so NULL and "" texts do not form one class
-    hashed = all_docs.where(F.length("text") >= cfg.min_doc_chars).select(
-        "doc_id", F.sha2("text", 256).alias("h")
-    ).join(new_ids.withColumn("_n", F.lit(True)), "doc_id", "left")
-    hw = Window.partitionBy("h")
-    exact_edges = (
-        hashed.select(
-            "doc_id",
-            F.min("doc_id").over(hw).alias("hub"),
-            F.count("*").over(hw).alias("n"),
-            F.max(F.coalesce(F.col("_n"), F.lit(False))).over(hw).alias("_touched"),
-        )
-        .where(F.col("_touched") & (F.col("n") > 1) & (F.col("doc_id") != F.col("hub")))
-        .select(F.col("hub").alias("src"), F.col("doc_id").alias("dst"))
-    )
+    # exact edges, delta-restricted like LSH: only hash classes containing a
+    # new doc emit edges (old-only classes are already inside prior clusters)
+    delta_ids = None if bootstrap else truly_new.select("doc_id")
+    exact_edges = exact_duplicate_edges(
+        eligible_docs(all_docs, cfg), "doc_id", "text", delta_ids=delta_ids
+    ).select("src", "dst")
 
     # delta mode: only (new, any) candidate pairs — per-batch LSH cost is
     # proportional to the delta, not the accumulated corpus
-    pairs = candidate_pairs(
-        feats, cfg, delta_ids=None if bootstrap else new_ids, scope=scope
-    )
+    pairs = candidate_pairs(feats, cfg, delta_ids=delta_ids, scope=scope)
     near = verify_pairs(pairs, feats, cfg).select("src", "dst")
 
     edges = exact_edges.unionByName(near)
@@ -320,16 +303,13 @@ def incremental_dedup(
     # (harmless extras if the batch dies here), CLUSTERS next, DOCS last as
     # the commit marker that flips the batch to "processed"
     fmt = {"format": FORMAT_VERSION}
-    # new_feats has exactly one row per truly_new doc: its written row count
-    # is the batch's new-doc count, without re-running the anti-join over
-    # every DOCS snapshot for a truly_new.count()
-    new_count = catalog.write_stage(new_feats, FEATURES_STAGE, metrics=fmt)["rows"]
+    catalog.write_stage(new_feats, FEATURES_STAGE, metrics=fmt)
     catalog.write_stage(
         delta_clusters,
         CLUSTERS_STAGE,
         metrics=fmt | {"bootstrap": bootstrap, "batch_seq": batch_seq},
     )
-    catalog.write_stage(truly_new, DOCS_STAGE, metrics=fmt | {"new_docs": new_count})
+    catalog.write_stage(truly_new, DOCS_STAGE, metrics=fmt)
     scope.release()
     if auto_compact is not None:
         active = catalog.active_snapshots(CLUSTERS_STAGE)

@@ -1,6 +1,6 @@
-"""Every entry point gives degenerate input the same meaning: ``run_dedup``,
-a bootstrap ``incremental_dedup`` and the spark-submit job agree on a corpus
-of NULL, empty and unique texts."""
+"""Every entry point gives the same input the same meaning: ``run_dedup``,
+``incremental_dedup`` (bootstrap and delta batches) and the spark-submit job
+agree on corpora of NULL, empty, short and exact-duplicate texts."""
 
 from __future__ import annotations
 
@@ -21,37 +21,106 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CFG = DedupConfig(shuffle_partitions=4)
 
 
+def _frame(spark, pdf):
+    return spark.createDataFrame(pdf, "url string, text string")
+
+
+def _partition(clusters) -> set:
+    """The url partition a (url, cluster_id) table induces."""
+    groups: dict = {}
+    for r in clusters.select("url", "cluster_id").collect():
+        groups.setdefault(r["cluster_id"], set()).add(r["url"])
+    return {frozenset(g) for g in groups.values()}
+
+
+def _batch_partition(spark, pdf, cfg=CFG) -> set:
+    res = run_dedup(_frame(spark, pdf), cfg)
+    got = _partition(res.clusters)
+    res.release()
+    return got
+
+
+def _incremental_partition(spark, root, batches, cfg=CFG) -> set:
+    cat = SnapshotCatalog(spark, root)
+    for pdf in batches:
+        clusters = incremental_dedup(spark, cat, _frame(spark, pdf), cfg, auto_compact=None)
+    return _partition(clusters)
+
+
+def _job(tmp_path, pdf) -> tuple[dict, str]:
+    """Runs the spark-submit job on ``pdf``; returns its summary line and
+    its catalog root."""
+    inp = str(tmp_path / "input.parquet")
+    pdf.to_parquet(inp, index=False)
+    workdir = str(tmp_path / "job")
+    cmd = [
+        sys.executable, os.path.join(_REPO, "jobs", "run_pipeline.py"),
+        "--input", inp, "--workdir", workdir, "--master", "local[2]",
+    ]
+    env = dict(os.environ, SPARK_SHUFFLE_PARTITIONS="4")
+    out = subprocess.run(cmd, capture_output=True, text=True, timeout=600, env=env)
+    assert out.returncode == 0, out.stderr[-2000:]
+    return json.loads(out.stdout.strip().splitlines()[-1]), workdir
+
+
+def _docs(texts) -> pd.DataFrame:
+    return pd.DataFrame({"url": [f"https://e.example/{i}" for i in range(len(texts))],
+                         "text": texts})
+
+
 @pytest.mark.slow
 def test_null_and_empty_texts_stay_singletons_at_every_entry_point(spark, tmp_path):
     """Docs shorter than ``min_doc_chars`` (NULL and "" included) skip the
     exact stage as well as the near-dup stages: sha2(NULL) is NULL, so an
     unfiltered exact stage put every NULL text, and every empty one, in a
     single cluster."""
-    texts = [None] * 3 + [""] * 3 + [
+    pdf = _docs([None] * 3 + [""] * 3 + [
         "the quick brown fox jumps over the lazy dog",
         "a completely different page about gardening in spring",
         "sports results from the weekend league fixtures",
         "recipe for a simple tomato soup with basil",
-    ]
-    pdf = pd.DataFrame({"url": [f"https://e.example/{i}" for i in range(10)], "text": texts})
-    df = spark.createDataFrame(pdf, "url string, text string")
-
-    res = run_dedup(df, CFG)
-    batch = res.clusters.select("cluster_id").distinct().count()
-    res.release()
-    cat = SnapshotCatalog(spark, str(tmp_path / "inc"))
-    inc = incremental_dedup(spark, cat, df, CFG, auto_compact=None)
-    bootstrap = inc.select("cluster_id").distinct().count()
-
-    inp = str(tmp_path / "input.parquet")
-    pdf.to_parquet(inp, index=False)
-    cmd = [
-        sys.executable, os.path.join(_REPO, "jobs", "run_pipeline.py"),
-        "--input", inp, "--workdir", str(tmp_path / "job"), "--master", "local[2]",
-    ]
-    env = dict(os.environ, SPARK_SHUFFLE_PARTITIONS="4")
-    out = subprocess.run(cmd, capture_output=True, text=True, timeout=600, env=env)
-    assert out.returncode == 0, out.stderr[-2000:]
-    job = json.loads(out.stdout.strip().splitlines()[-1])
-
+    ])
+    batch = len(_batch_partition(spark, pdf))
+    bootstrap = len(_incremental_partition(spark, str(tmp_path / "inc"), [pdf]))
+    job, _ = _job(tmp_path, pdf)
     assert (batch, bootstrap, job["clusters"]) == (10, 10, 10)
+
+
+SHORT = "the quick brown fox jumps over the lazy dog"
+LONG = "a completely different page about gardening in spring, with notes on soil and seeds"
+
+
+@pytest.mark.slow
+def test_short_near_copies_stay_singletons_in_batch_and_incremental(spark, tmp_path):
+    """Near-copies shorter than ``min_doc_chars`` get no features, so they
+    stay singletons in a bootstrap batch and in a delta batch alike, while
+    long near-copies still cluster."""
+    cfg = DedupConfig(shuffle_partitions=4, min_doc_chars=60)
+    texts = [SHORT, LONG, SHORT + ".", SHORT + "!", LONG + " today"]
+    pdf = _docs(texts)
+    urls = list(pdf["url"])
+    want = {frozenset([urls[0]]), frozenset([urls[2]]), frozenset([urls[3]]),
+            frozenset([urls[1], urls[4]])}
+    assert _batch_partition(spark, pdf, cfg) == want
+    assert _incremental_partition(spark, str(tmp_path / "boot"), [pdf], cfg) == want
+    delta = _incremental_partition(spark, str(tmp_path / "delta"), [pdf[:2], pdf[2:]], cfg)
+    assert delta == want
+
+
+@pytest.mark.slow
+def test_exact_duplicates_cluster_alike_at_every_entry_point(spark, tmp_path):
+    """Byte-identical classes, one with a near-copy that bridges it to the
+    near-dup graph, give the same clusters in ``run_dedup``, a bootstrap
+    ``incremental_dedup`` and the job."""
+    pdf = _docs([LONG] * 3 + [SHORT] * 2 + [
+        LONG + " today",
+        "sports results from the weekend league fixtures",
+        "recipe for a simple tomato soup with basil",
+    ])
+    urls = list(pdf["url"])
+    want = {frozenset(urls[:3] + [urls[5]]), frozenset(urls[3:5]),
+            frozenset([urls[6]]), frozenset([urls[7]])}
+    assert _batch_partition(spark, pdf) == want
+    assert _incremental_partition(spark, str(tmp_path / "inc"), [pdf]) == want
+    job, workdir = _job(tmp_path, pdf)
+    assert _partition(SnapshotCatalog(spark, workdir).read_stage("s6_clusters")) == want

@@ -53,7 +53,7 @@ def test_incremental_idempotent_on_resubmission(spark, tmp_path, corpus):
     assert c2.count() == n1
     assert _partition_pairs(c2.collect()) == p1
     # the DOCS manifest counts only the docs each batch actually added
-    new_docs = [e["metrics"]["new_docs"] for e in cat.snapshots(DOCS_STAGE)]
+    new_docs = [e["rows"] for e in cat.snapshots(DOCS_STAGE)]
     assert new_docs == [len(batch1), 0]
 
 

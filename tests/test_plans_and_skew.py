@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from product_deduplication_spark.config import DedupConfig
 from product_deduplication_spark.functions.features import with_features
+from product_deduplication_spark.operators.exact_dedup import exact_duplicate_edges
 from product_deduplication_spark.operators.lsh import candidate_pairs
 from product_deduplication_spark.plans import queries as Q
 
@@ -166,6 +167,40 @@ def test_delta_candidates_new_min_id_hub_reaches_old_members(spark):
     }
     # -1 is the new hub of the hot band-0 bucket: stars to every old member
     assert (-1, 0) in got and (-1, 50) in got and (-1, 51) in got
+
+
+def _exact_fixture(spark):
+    """Hash classes {10, 20, 30}, {40, 50}, {60} and {-5, 70, 80}."""
+    rows = [(10, "alpha"), (20, "alpha"), (30, "alpha"), (40, "beta"), (50, "beta"),
+            (60, "gamma"), (70, "delta"), (80, "delta"), (-5, "delta")]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _edge_set(df) -> set:
+    return {(r["src"], r["dst"]) for r in df.collect()}
+
+
+def test_delta_exact_edges_equal_new_vs_all(spark):
+    """Delta mode emits exactly the full-mode edges of the hash classes that
+    contain a new doc: a touched class emits its whole star, old-only and
+    singleton classes emit nothing."""
+    docs = _exact_fixture(spark)
+    full = _edge_set(exact_duplicate_edges(docs))
+    delta = spark.createDataFrame([(30,), (60,)], "doc_id long")
+    got = _edge_set(exact_duplicate_edges(docs, delta_ids=delta))
+    assert got == {(s, d) for (s, d) in full if s == 10}
+    assert got == {(10, 20), (10, 30)}
+
+
+def test_delta_exact_edges_new_min_id_hub_reaches_old_members(spark):
+    """A new doc that becomes its class's min-id hub stars to the OLD
+    members, as the full mode does."""
+    docs = _exact_fixture(spark)
+    full = _edge_set(exact_duplicate_edges(docs))
+    delta = spark.createDataFrame([(-5,)], "doc_id long")
+    got = _edge_set(exact_duplicate_edges(docs, delta_ids=delta))
+    assert got == {(s, d) for (s, d) in full if s == -5}
+    assert got == {(-5, 70), (-5, 80)}
 
 
 def test_canonical_upsert_never_forces_broadcast(spark):

@@ -76,13 +76,20 @@ def test_pipeline_job_resume_identical_output(tmp_path):
     w2 = str(tmp_path / "w_resume")
     stopped = run(w2, stop_after="s4_candidates")
     assert "stopped_after" in stopped
+
+    def manifest():
+        return [json.loads(line) for line in open(os.path.join(w2, "manifest.jsonl"))]
+
+    # the job stops right after the named stage, before computing the next
+    assert [e["stage"] for e in manifest()] == [
+        "s1_docs", "s2_features", "s3_exact", "s4_candidates"
+    ]
     resumed = run(w2)
     assert resumed["docs"] == full["docs"]
     assert resumed["clusters"] == full["clusters"]
     # resume actually reused snapshots: s1/s2 have exactly one snapshot each
-    manifest = [json.loads(line) for line in open(os.path.join(w2, "manifest.jsonl"))]
     by_stage = {}
-    for e in manifest:
+    for e in manifest():
         by_stage.setdefault(e["stage"], []).append(e)
     assert len(by_stage["s2_features"]) == 1
     assert len(by_stage["s4_candidates"]) == 1
