@@ -32,13 +32,9 @@ class DedupConfig:
     # --- MinHash / LSH ---------------------------------------------------
     num_hashes: int = 126       # MinHash signature length
     lsh_bands: int = 21         # bands; rows_per_band = num_hashes // lsh_bands
-    # "oph" = one-permutation hashing w/ rotation densification (one pass
-    # over the shingles — compute-bound, scales with cores); "kwise" =
-    # classic per-permutation multiply-shift (num_hashes passes — DRAM-bound
-    # under many-executor concurrency). Same estimator quality (rmse ~0.025
-    # at 126 bins, property-tested); signatures are NOT interchangeable
-    # between modes.
-    minhash_mode: str = "oph"
+    # signatures are one-permutation hashing with rotation densification
+    # (hashing.oph_signatures: one pass over the shingles); its Jaccard
+    # estimate is property-tested for sets of at least num_hashes shingles
     jaccard_threshold: float = 0.8  # exact-Jaccard verify threshold
     # minhash-estimate prefilter margin: candidates with estimated Jaccard
     # below (threshold - margin) skip the expensive exact verify join.

@@ -64,14 +64,13 @@ def make_feature_udf(cfg: DedupConfig, simhash: bool = True):
 
     shingles: distinct k-shingle hashes (char or token mode) — the exact-
     Jaccard verify stage uses these via JVM array_intersect + set sizes.
-    minhash: length ``cfg.num_hashes`` signature (batched numpy, xor-seed
-    splitmix64 family, ``hashing.minhash_signatures``).
+    minhash: length ``cfg.num_hashes`` one-permutation-hashing signature
+    (batched numpy, ``hashing.oph_signatures``).
     simhash: 64-bit TF-weighted fingerprint.
     """
     seeds = hashing.minhash_seeds(cfg.num_hashes, cfg.seed)
     k = cfg.shingle_k
     mode = cfg.shingle_mode
-    minhash_mode = cfg.minhash_mode
     n_bands = cfg.lsh_bands
     want_simhash = simhash
 
@@ -82,10 +81,7 @@ def make_feature_udf(cfg: DedupConfig, simhash: bool = True):
             shingle_sets = hashing.char_shingle_hashes_batch(texts, k)
         else:
             shingle_sets = hashing.token_ngram_hashes_batch(texts, k)
-        if minhash_mode == "oph":
-            sig = hashing.oph_signatures(shingle_sets, seeds)
-        else:
-            sig = hashing.minhash_signatures(shingle_sets, seeds)
+        sig = hashing.oph_signatures(shingle_sets, seeds)
         if want_simhash:
             tok = hashing.token_hashes_batch(texts)
             sh = hashing.simhash64(tok)

@@ -273,11 +273,10 @@ def token_ngram_hashes(text: str, n: int) -> np.ndarray:
 
 def minhash_seeds(num_hashes: int, seed: int) -> np.ndarray:
     """(2, num_hashes) multiply-shift parameters: odd multipliers a_i and
-    offsets b_i. h_i(x) = ((a_i * x + b_i) mod 2^64) >> 16 is a universal
-    48-bit hash family (Dietzfelbinger et al. multiply-shift) — 3 vector ops
-    per permutation vs 10 for a full mixer, and ample for MinHash over
-    inputs that are already splitmix64-mixed shingle hashes (quality is
-    property-tested: estimate within eps of exact Jaccard)."""
+    offsets b_i. h(x) = ((a * x + b) mod 2^64) >> 16 is a universal 48-bit
+    hash (Dietzfelbinger et al. multiply-shift), ample over inputs that are
+    already splitmix64-mixed shingle hashes. ``oph_signatures`` rehashes
+    with the first (a, b) pair and takes its bin count from the width."""
     rng = np.random.default_rng(seed)
     a = rng.integers(1, 2**63 - 1, size=num_hashes, dtype=np.uint64) * np.uint64(2) + np.uint64(1)
     b = rng.integers(0, 2**63 - 1, size=num_hashes, dtype=np.uint64)
@@ -301,64 +300,6 @@ def _splitmix64_inplace(z: np.ndarray, scratch: np.ndarray) -> None:
 
 
 @_wraparound
-def minhash_signatures(shingle_arrays: list[np.ndarray], seeds: np.ndarray) -> np.ndarray:
-    """MinHash signatures for a batch of shingle-hash sets.
-
-    Vectorized across the whole batch: concatenate every doc's shingles into
-    a single array H once; for each permutation apply the multiply-shift
-    hash in place and take per-doc minima with ``np.minimum.reduceat`` —
-    no per-doc Python loop, no 2-D intermediates (one reusable scratch
-    buffer of |tile| total).
-
-    Docs with zero shingles get an all-max sentinel signature (they are
-    filtered before LSH anyway).
-
-    Returns int64 array of shape (n_docs, num_hashes) (uint64 bit-view).
-    """
-    n_docs = len(shingle_arrays)
-    a_params, b_params = seeds[0], seeds[1]
-    nh = a_params.size
-    sig = np.full((n_docs, nh), _U64_MAX, dtype=np.uint64)
-    sizes = np.fromiter((a.size for a in shingle_arrays), dtype=np.int64, count=n_docs)
-    nonempty = np.flatnonzero(sizes > 0)
-    if nonempty.size == 0:
-        return sig.view(np.int64)
-    H = np.concatenate([shingle_arrays[i] for i in nonempty])
-    offsets = np.zeros(nonempty.size, dtype=np.int64)
-    np.cumsum(sizes[nonempty][:-1], out=offsets[1:])
-    # tile by doc slices so the working set (H slice + mixed buffer) stays
-    # inside per-core L2 across the nh-seed inner loop. This matters under
-    # many-worker concurrency: the kernel is memory-bound, and with 32
-    # parallel executors an L2-resident tile turns 126 DRAM sweeps per batch
-    # into one DRAM load per tile (measured 3-4x wall-clock at local[32]).
-    tile_elems = 1 << 16  # 64k shingles ~ 512 KiB per buffer
-    mixed = np.empty(min(tile_elems * 2, H.size), dtype=np.uint64)
-    d0 = 0
-    while d0 < nonempty.size:
-        d1 = d0
-        end = offsets[d0]
-        limit = offsets[d0] + tile_elems
-        total = H.size
-        while d1 < nonempty.size and end < limit:
-            end = offsets[d1 + 1] if d1 + 1 < nonempty.size else total
-            d1 += 1
-        start = offsets[d0]
-        Hs = H[start:end]
-        off_s = offsets[d0:d1] - start
-        if Hs.size > mixed.size:  # lone giant doc larger than the tile
-            mixed = np.empty(Hs.size, dtype=np.uint64)
-        m = mixed[: Hs.size]
-        rows = nonempty[d0:d1]
-        for i in range(nh):
-            np.multiply(Hs, a_params[i], out=m)
-            m += b_params[i]
-            m >>= np.uint64(16)
-            sig[rows, i] = np.minimum.reduceat(m, off_s)
-        d0 = d1
-    return sig.view(np.int64)
-
-
-@_wraparound
 def oph_signatures(
     shingle_arrays: list[np.ndarray], seeds: np.ndarray, num_bins: int | None = None
 ) -> np.ndarray:
@@ -373,8 +314,18 @@ def oph_signatures(
     nearest filled bin to the right (circular), which preserves the LSH
     banding collision property.
 
-    ~50x less DRAM traffic than the k-wise kernel — this is what keeps the
-    feature stage compute-bound (scalable) under many-executor concurrency.
+    ~50x less DRAM traffic than num_hashes independent permutations — this
+    is what keeps the feature stage compute-bound (scalable) under
+    many-executor concurrency.
+
+    Small shingle sets: with fewer shingles than bins, most bins are
+    densified copies of the few filled ones, so the estimate is biased on
+    tiny sets and noisy on small ones. At 256 bins, {aaa} vs {aaa, aab} has
+    Jaccard 0.5 but estimates 0.83, and two 32-shingle sets at Jaccard 0.45
+    read with sd ~0.08, against ~0.03 once the sets reach the bin count.
+    Verification computes exact Jaccard, so this only changes which small
+    docs become candidates or pass the verify prefilter (recall), never a
+    verified edge's similarity.
 
     seeds: same (2, num_hashes) params as minhash_seeds — row 0's first
     entry is used to decorrelate the single hash; num_bins defaults to

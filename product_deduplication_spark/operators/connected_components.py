@@ -173,11 +173,9 @@ def connected_components(
     return members.unionByName(roots).dropDuplicates(["node"])
 
 
-def assign_clusters(
-    docs: DataFrame, edges: DataFrame, id_col: str = "doc_id", catalog=None
-) -> DataFrame:
+def assign_clusters(docs: DataFrame, edges: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Every doc gets a cluster_id: its component root, or itself if unlinked."""
-    labels = connected_components(edges, catalog=catalog)
+    labels = connected_components(edges)
     return (
         docs.join(labels, docs[id_col] == labels["node"], "left")
         .withColumn("cluster_id", F.coalesce(F.col("component"), F.col(id_col)))
@@ -190,7 +188,6 @@ def assign_clusters_contracted(
     star_edges: DataFrame,
     other_edges: DataFrame,
     id_col: str = "doc_id",
-    catalog=None,
     scope: CacheScope | None = None,
 ) -> DataFrame:
     """assign_clusters with the exact-duplicate classes CONTRACTED out of
@@ -228,7 +225,7 @@ def assign_clusters_contracted(
         )
         .where(F.col("src") != F.col("dst"))
     )
-    labels = connected_components(contracted, catalog=catalog)
+    labels = connected_components(contracted)
     # members inherit their hub's component; a hub with no near edges has no
     # label row and the member labels fall back to the hub id itself
     member_labels = (

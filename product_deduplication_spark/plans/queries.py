@@ -453,7 +453,7 @@ def token_jaccard_lsh_impl(docs: DataFrame, query_pred, shuffle_partitions: int)
     demonstrates the crossover on the sparse webtext corpus.
     """
     from product_deduplication_spark.functions.features import with_features
-    from product_deduplication_spark.operators.lsh import _pack_band_key, explode_bands
+    from product_deduplication_spark.operators.lsh import explode_bands
 
     cfg = DedupConfig(
         shingle_mode="token",
@@ -474,9 +474,7 @@ def token_jaccard_lsh_impl(docs: DataFrame, query_pred, shuffle_partitions: int)
     # feature pass and a single exchange, on a packed 1-long bucket key.
     # Query lists stay tiny (bounded by the probe set), so the per-row
     # collect is O(queries-in-bucket), never O(bucket).
-    bands = explode_bands(feats, cfg).select(
-        "node", _pack_band_key(F.col("band"), F.col("band_hash")).alias("bkey")
-    )
+    bands = explode_bands(feats)
     qs = F.collect_list(F.when(query_pred(F.col("node")), F.col("node"))).over(
         Window.partitionBy("bkey")
     )

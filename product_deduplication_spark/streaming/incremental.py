@@ -96,7 +96,7 @@ def _check_format(catalog: SnapshotCatalog) -> None:
             f"code writes format {FORMAT_VERSION}: old snapshots lack the "
             "precomputed band-hash column and use full-rewrite clusters "
             "snapshots. Rebuild the catalog (re-run bootstrap) or migrate: "
-            "recompute features with band_hash_array and rewrite clusters "
+            "recompute features with with_features and rewrite clusters "
             "as a batch_seq=0 delta."
         )
 

@@ -10,10 +10,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from product_deduplication_spark.config import DedupConfig
 from product_deduplication_spark.functions.features import with_features
+from product_deduplication_spark.functions.hashing import band_hashes_from_signatures
 from product_deduplication_spark.operators.exact_dedup import exact_duplicate_edges
 from product_deduplication_spark.operators.lsh import candidate_pairs
 from product_deduplication_spark.plans import queries as Q
@@ -57,7 +59,7 @@ def test_hot_bucket_produces_linear_edges(spark):
     )
     cfg = DedupConfig(shuffle_partitions=8, bucket_cap=64)
     feats = with_features(spark.createDataFrame(docs), cfg).select(
-        "doc_id", "shingles", "minhash", "simhash"
+        "doc_id", "shingles", "minhash", "simhash", "bands"
     )
     pairs = candidate_pairs(feats, cfg)
     assert pairs.count() == n - 1
@@ -74,22 +76,31 @@ def test_mixed_hot_and_normal_buckets(spark):
     docs = pd.DataFrame({"doc_id": range(220), "text": hot + normal})
     cfg = DedupConfig(shuffle_partitions=8, bucket_cap=64)
     feats = with_features(spark.createDataFrame(docs), cfg).select(
-        "doc_id", "shingles", "minhash", "simhash"
+        "doc_id", "shingles", "minhash", "simhash", "bands"
     )
     n_pairs = candidate_pairs(feats, cfg).count()
     # hot star: 199 edges; normal docs are mutually dissimilar -> few extras
     assert 199 <= n_pairs <= 199 + 40
 
 
+# 4-band/2-row config: band slices are sig[0:2], sig[2:4], sig[4:6], sig[6:8]
+_LSH_CFG = DedupConfig(num_hashes=8, lsh_bands=4, bucket_cap=4, shuffle_partitions=8)
+
+
 def _sig_features(spark, rows):
-    """Hand-built (doc_id, minhash) features for surgical LSH tests."""
+    """Hand-built (doc_id, minhash, bands) features for surgical LSH tests:
+    band hashes come from the feature kernel's numpy banding, so equal
+    signature slices collide exactly as in the pipeline."""
+    sigs = np.array([sig for _, sig in rows], dtype=np.int64)
+    bands = band_hashes_from_signatures(sigs, _LSH_CFG.lsh_bands)
     return spark.createDataFrame(
-        [(i, sig) for i, sig in rows], "doc_id long, minhash array<long>"
+        [(i, sig, b.tolist()) for (i, sig), b in zip(rows, bands)],
+        "doc_id long, minhash array<long>, bands array<long>",
     )
 
 
-# 4-band/2-row config: band slices are sig[0:2], sig[2:4], sig[4:6], sig[6:8]
-_LSH_CFG = DedupConfig(num_hashes=8, lsh_bands=4, bucket_cap=4, shuffle_partitions=8)
+def _edge_set(df) -> set:
+    return {(r["src"], r["dst"]) for r in df.collect()}
 
 
 def _two_hot_band_fixture():
@@ -117,41 +128,47 @@ def test_hot_bucket_secondary_reband_recovers_pair(spark):
     assert (0, 50) in pairs and (20, 51) in pairs
 
 
+def _still_hot_fixture():
+    """The two-hot-band fixture plus a bucket-cap-busting block of 10
+    identical signatures (ids 100-109): still-hot sub-buckets and a hub star
+    on top of the fixture's hot and re-band cases."""
+    return _two_hot_band_fixture() + [(100 + i, [7, 7, 8, 8, 9, 9, 10, 10]) for i in range(10)]
+
+
 def test_bootstrap_fast_path_equals_general_path(spark):
-    """The bootstrap fast path (packed single-long bucket keys, no is_new
-    column, primitive member arrays) must emit EXACTLY the general path's
-    pair set when every doc is new. Force the general path by passing
-    delta_ids = all ids; cover small buckets, hot buckets, secondary
-    re-banding, and still-hot stars via the fixture + a boilerplate block."""
-    rows = _two_hot_band_fixture()
-    # a bucket-cap-busting block of identical signatures (still-hot sub-
-    # buckets + hub star) on top of the fixture's hot/reband cases
-    rows += [(100 + i, [7, 7, 8, 8, 9, 9, 10, 10]) for i in range(10)]
-    cfg = _LSH_CFG.with_(bucket_cap=4)
-    feats = _sig_features(spark, rows)
-    fast = {(r["src"], r["dst"]) for r in candidate_pairs(feats, cfg).collect()}
+    """Delta mode with every doc new (delta_ids = all ids) must emit EXACTLY
+    the bootstrap pair set: every bucket is touched and every pair has a
+    new end. Covers small buckets, hot buckets, secondary re-banding and
+    still-hot stars via the still-hot fixture."""
+    feats = _sig_features(spark, _still_hot_fixture())
+    full = _edge_set(candidate_pairs(feats, _LSH_CFG))
     all_ids = feats.select(F.col("doc_id"))
-    general = {
-        (r["src"], r["dst"])
-        for r in candidate_pairs(feats, cfg, delta_ids=all_ids).collect()
-    }
-    assert fast == general
-    assert (50, 51) in fast and (100, 101) in fast
+    assert _edge_set(candidate_pairs(feats, _LSH_CFG, delta_ids=all_ids)) == full
+    assert (50, 51) in full and (100, 101) in full
 
 
-def test_delta_candidates_equal_new_vs_all(spark):
+@pytest.mark.parametrize(
+    "new_ids",
+    [[51], [104], [-1], "all", []],
+    ids=["reband_pair_only", "still_hot_member", "new_min_id_hub", "all_ids", "empty"],
+)
+def test_delta_candidates_equal_new_vs_all(spark, new_ids):
     """Delta mode emits exactly the full-mode pairs that touch a new doc —
-    per-batch cost proportional to the delta, zero recall loss."""
-    feats = _sig_features(spark, _two_hot_band_fixture())
-    full = {(r["src"], r["dst"]) for r in candidate_pairs(feats, _LSH_CFG).collect()}
-    delta = spark.createDataFrame([(51,)], "doc_id long")
-    got = {
-        (r["src"], r["dst"])
-        for r in candidate_pairs(feats, _LSH_CFG, delta_ids=delta).collect()
-    }
-    want = {(s, d) for (s, d) in full if s == 51 or d == 51}
-    assert got == want
-    assert all(s == 51 or d == 51 for (s, d) in got)
+    per-batch cost proportional to the delta, zero recall loss. Cases: 51,
+    whose pair with 50 only re-banding finds; one member of the still-hot
+    block; a new doc -1 that becomes the hot band-0 bucket's min-id hub;
+    every id; and no id at all."""
+    rows = _still_hot_fixture()
+    rows.append((-1, [1, 1] + [90_001, 1] + [90_002, 1] + [90_003, 1]))
+    feats = _sig_features(spark, rows)
+    new = {i for i, _ in rows} if new_ids == "all" else set(new_ids)
+    full = _edge_set(candidate_pairs(feats, _LSH_CFG))
+    delta = spark.createDataFrame([(i,) for i in sorted(new)], "doc_id long")
+    got = _edge_set(candidate_pairs(feats, _LSH_CFG, delta_ids=delta))
+    assert got == {(s, d) for (s, d) in full if s in new or d in new}
+    assert bool(got) == bool(new)
+    if new_ids == [51]:
+        assert (50, 51) in got
 
 
 def test_delta_candidates_new_min_id_hub_reaches_old_members(spark):
@@ -174,10 +191,6 @@ def _exact_fixture(spark):
     rows = [(10, "alpha"), (20, "alpha"), (30, "alpha"), (40, "beta"), (50, "beta"),
             (60, "gamma"), (70, "delta"), (80, "delta"), (-5, "delta")]
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def _edge_set(df) -> set:
-    return {(r["src"], r["dst"]) for r in df.collect()}
 
 
 def test_delta_exact_edges_equal_new_vs_all(spark):
