@@ -5,8 +5,8 @@ a strong reference until ``unpersist()`` — the ContextCleaner never reclaims
 it (it only tracks GC'd RDD objects, and the CacheManager keeps the plan
 alive). An operator that persists an internal subtree and returns a lazy
 DataFrame therefore leaks one cache entry per invocation in a long-lived
-session: the incremental/streaming loop calls ``candidate_pairs`` once per
-micro-batch, so without an explicit release the cached blocks accumulate for
+session: an incremental ingest loop calls ``candidate_pairs`` once per
+batch, so without an explicit release the cached blocks accumulate for
 the life of the job (memory pressure, then unbounded disk spill under
 MEMORY_AND_DISK).
 

@@ -38,8 +38,12 @@ class DedupConfig:
     jaccard_threshold: float = 0.8  # exact-Jaccard verify threshold
     # minhash-estimate prefilter margin: candidates with estimated Jaccard
     # below (threshold - margin) skip the expensive exact verify join.
-    # With 126 hashes, se at s=0.8 is ~0.036 → a 0.25 margin is ~7 sigma:
-    # P(drop a true pair) < 1e-11. Set to None to disable.
+    # Measured sd of the 126-bin OPH estimate at Jaccard 0.8 (random sets,
+    # 3,000-10,000 trials each): 0.082 at 20 shingles, 0.058 at 40, 0.040
+    # at 100, 0.031 at 278. So a 0.25 margin is >= 6.2 sigma only from 100
+    # shingles up (20 shingles: 3 sigma, 12 of 3,000 true pairs dropped);
+    # verify.N_MIN applies the filter only to pairs whose smaller set has
+    # that many. Set to None to disable.
     prefilter_margin: float | None = 0.25
 
     # --- SimHash ---------------------------------------------------------

@@ -11,11 +11,15 @@ Re-expresses ``reference/clean_canonical.py`` (SURVEY.md §2.1 S6, V10, V11,
   split
 - leader pinning: existing canonical leaders stay leaders of their group
   (``reference/bivariate_comparison.py:158-172``, V10)
+- missing items appended with fresh ids (``reference/appends_uuids.py``)
+  → ``append_missing_members``
 - sequential canonical id assignment (``reference/clean_canonical.py:47-50,
-  357``) → two-pass range-partitioned row numbering, NO single-partition
+  357``) → a two-pass range-partitioned running count, NO single-partition
   global window (SURVEY.md §4.4): repartitionByRange gives ordered partition
-  ids, per-partition counts give offsets, row_number runs inside each
-  partition.
+  ids, per-partition counts give offsets, and a running sum inside each
+  partition adds the rest. ``ordered_cumsum`` (the pareto running share) is
+  the same scan over a value column instead of a count. Both checkpoint
+  with ``localCheckpoint`` so the two passes read identical partitions.
 
 Table shapes follow FIXTURES.md F3:
   canonical_catalog(canonical_id, canonical_leader)
@@ -28,79 +32,71 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 
-def pin(df: DataFrame, catalog=None, stage: str = "pin") -> DataFrame:
-    """Materialize ``df`` so later actions see EXACTLY these rows/partitions.
-
-    Local fast path: ``localCheckpoint`` — blocks live unreplicated on
-    executors, which is fine single-box but loses the job on executor death
-    in a real cluster. When a ``SnapshotCatalog`` is supplied the pin routes
-    through reliable storage instead (write_stage + read back — the Iceberg
-    snapshot analog), making the two-pass id/cumsum pins and the CC frontier
-    resumable; per-partition lineage lands in the manifest for free."""
-    if catalog is None:
-        return df.localCheckpoint()
-    entry = catalog.write_stage(df, stage)
-    return catalog.read_stage(stage, entry["snapshot_id"])
+def _two_pass_running_sum(
+    df: DataFrame, order_exprs: list, value, out_col: str, first: int | float
+) -> tuple[DataFrame, int | float]:
+    """Global running sum of ``value`` over ``order_exprs`` without a
+    single-partition window (SURVEY.md §4.4). Range-partition on the order
+    (range partition i holds keys strictly below partition i+1), sum
+    ``value`` per partition, turn the sums into per-partition offsets
+    (starting at ``first``) in a tiny driver-side map (O(partitions), not
+    O(rows)), then broadcast-join the offsets and run a ROWS-framed sum
+    inside each partition. Offsets are longs for an int ``first``, doubles
+    for a float one. Returns (df + out_col, first + grand total)."""
+    spark = df.sparkSession
+    n_part = max(spark.sparkContext.defaultParallelism, 1)
+    # Checkpoint the INPUT before range partitioning: the aggregate action
+    # and the running-sum action must see the SAME partition contents. Range
+    # boundaries come from sampling, but RangePartitioner's sampling seeds
+    # are a pure function of partition index — identical input partitions
+    # give identical boundaries in both jobs. It also runs the (possibly
+    # expensive) lineage above ONCE, not once per pass.
+    df = df.localCheckpoint()
+    # ...and checkpoint the RANGE PARTITIONING too: RangePartitioner samples
+    # with RDD-id-derived seeds, so each action would otherwise draw
+    # different boundaries — the sums below must describe the exact _pid
+    # labels the running-sum job reads (after this point _pid is frozen
+    # DATA, so the groupBy/window below are correct under any later re-split).
+    ranged = (
+        df.repartitionByRange(n_part, *order_exprs)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint()
+    )
+    sums = ranged.groupBy("_pid").agg(F.sum(value).alias("_s")).collect()
+    offsets, acc = [], first
+    for row in sorted(sums, key=lambda r: r["_pid"]):
+        offsets.append((int(row["_pid"]), acc))
+        acc += row["_s"] or 0
+    off_type = "double" if isinstance(first, float) else "long"
+    off_df = spark.createDataFrame(offsets, f"_pid int, _offset {off_type}")
+    w = Window.partitionBy("_pid").orderBy(*order_exprs).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    out = (
+        ranged.join(F.broadcast(off_df), "_pid")
+        .withColumn(out_col, F.sum(value).over(w) + F.col("_offset"))
+        .drop("_pid", "_offset")
+    )
+    return out, acc
 
 
 def assign_sequential_ids(
-    df: DataFrame, order_cols: list[str], id_col: str, start: int = 1, catalog=None
+    df: DataFrame, order_cols: list[str], id_col: str, start: int = 1
 ) -> DataFrame:
-    """Deterministic gap-free sequential ids without a global window.
-
-    Two-pass (SURVEY.md §4.4): range-repartition on the order columns (range
-    partition i holds keys strictly below partition i+1), count rows per
-    partition, cumulative offsets via a tiny driver-side map (numPartitions
-    entries — O(partitions), not O(rows)), then row_number within each
-    partition.
-    """
-    n_part = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    # Pin the INPUT before range partitioning: the counts action and the
-    # id-assignment action must see the SAME partition contents. Range
-    # boundaries come from sampling, but RangePartitioner's sampling seeds
-    # are a pure function of partition index — identical input partitions
-    # (guaranteed by the pin) give identical boundaries in both jobs.
-    # Pinning upstream of the range shuffle also means the (possibly
-    # expensive) lineage above runs ONCE, not once per pass.
-    df = pin(df, catalog, "pin_seqid_input")
-    # ...and pin the RANGE PARTITIONING too: RangePartitioner samples with
-    # RDD-id-derived seeds, so each action would otherwise draw different
-    # boundaries — the counts below must describe the exact _pid labels the
-    # id-assignment job reads (after this point _pid is frozen DATA, so the
-    # groupBy/window below are correct under any later re-split).
-    ranged = pin(
-        df.repartitionByRange(n_part, *[F.col(c) for c in order_cols]).withColumn(
-            "_pid", F.spark_partition_id()
-        ),
-        catalog,
-        "pin_seqid_ranged",
+    """Deterministic gap-free sequential ids without a global window: the
+    running count of rows in ``order_cols`` order, offset so the first row
+    gets ``start`` (equal to ``row_number() - 1 + start`` over the order)."""
+    out, _ = _two_pass_running_sum(
+        df, [F.col(c) for c in order_cols], F.lit(1), id_col, start - 1
     )
-    counts = ranged.groupBy("_pid").count().collect()
-    offsets = {}
-    acc = start
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets[row["_pid"]] = acc
-        acc += row["count"]
-    spark = df.sparkSession
-    off_df = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()], "_pid int, _offset long"
-    )
-    w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
-    return (
-        ranged.join(F.broadcast(off_df), "_pid")
-        .withColumn(id_col, F.row_number().over(w) - 1 + F.col("_offset"))
-        .drop("_pid", "_offset")
-    )
+    return out
 
 
 def ordered_cumsum(
-    df: DataFrame, order_exprs: list, value_col: str, out_col: str, catalog=None
+    df: DataFrame, order_exprs: list, value_col: str, out_col: str
 ) -> tuple[DataFrame, float]:
-    """Global running sum over a total order WITHOUT a single-partition
-    window (SURVEY.md §4.4, same two-pass as assign_sequential_ids):
-    range-partition on the order, cumsum within each partition, add the
-    broadcast cumulative offset of all earlier partitions. Returns
-    (df + out_col, grand_total). The driver-side state is O(partitions).
+    """Global running sum of ``value_col`` over a total order without a
+    single-partition window. Returns (df + out_col, grand_total).
 
     order_exprs: sort expressions (e.g. [F.desc("rev"), F.asc("key")]) —
     must define a total order for a deterministic result.
@@ -114,34 +110,8 @@ def ordered_cumsum(
     epsilon/decimal comparison at larger scale factors where boundary
     collisions become likely.
     """
-    n_part = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    # pin input partitions once (see assign_sequential_ids: deterministic
-    # range boundaries + single evaluation of the upstream lineage)
-    df = pin(df, catalog, "pin_cumsum_input")
-    ranged = pin(  # pin sampled range boundaries across the two jobs
-        df.repartitionByRange(n_part, *order_exprs).withColumn(
-            "_pid", F.spark_partition_id()
-        ),
-        catalog,
-        "pin_cumsum_ranged",
-    )
-    sums = ranged.groupBy("_pid").agg(F.sum(value_col).alias("_s")).collect()
-    offsets, acc = {}, 0.0
-    for row in sorted(sums, key=lambda r: r["_pid"]):
-        offsets[row["_pid"]] = acc
-        acc += row["_s"] or 0.0
-    off_df = df.sparkSession.createDataFrame(
-        [(int(p), float(o)) for p, o in offsets.items()], "_pid int, _offset double"
-    )
-    w = Window.partitionBy("_pid").orderBy(*order_exprs).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    out = (
-        ranged.join(F.broadcast(off_df), "_pid")
-        .withColumn(out_col, F.sum(value_col).over(w) + F.col("_offset"))
-        .drop("_pid", "_offset")
-    )
-    return out, float(acc)
+    out, total = _two_pass_running_sum(df, order_exprs, value_col, out_col, 0.0)
+    return out, float(total)
 
 
 def bootstrap_canonical(groups: DataFrame, start_id: int = 1) -> tuple[DataFrame, DataFrame]:

@@ -1,4 +1,5 @@
-"""Connected components via alternating large-star / small-star.
+"""Connected components: a driver-side union-find for small graphs,
+alternating large-star / small-star for large ones.
 
 Replaces the reference's sequential greedy group-union loop
 (``reference/static.py:127-175``, driver loop ``static.py:286-289``;
@@ -8,24 +9,26 @@ verified-pair edge list (SURVEY.md §2.8 note on V7/A12) — large-star/
 small-star computes exactly that in O(log n) rounds (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC 2014).
 
-Each round is two window-min passes (one exchange of the edge list each —
-see _large_star) plus a dedup; ``localCheckpoint`` per round truncates
-lineage (SURVEY.md §4.2). Convergence: edge count stable (one cheap count
-per round, which doubles as the checkpoint materializer) and the edge set
-is a star forest (``_is_star_forest`` — a fixed point of both star ops, so
-the round that reaches it is the last; the former multiset-signature
-compare burned a full extra round just to observe stability).
+The edge list is first canonicalized (u > v, distinct, no self-loops) and
+checkpointed eagerly with ``localCheckpoint``; one bounded collect then
+decides the path:
+
+- Small graphs finish on the driver. The loop's per-round job latency is
+  the whole cost at a few thousand edges, so up to ``LOCAL_MAX_EDGES``
+  edges are labelled by a numpy union-find (``_local_components``). The
+  limit is a constant, not a config field: both paths label identically,
+  so it only bounds driver memory (about 16 MB of Arrow).
+- Larger graphs run the large-star/small-star loop. Each round is two
+  window-min passes (one exchange of the edge list each — see
+  _large_star) plus a dedup, and ends in a lazy ``localCheckpoint`` that
+  truncates lineage (SURVEY.md §4.2). Convergence: a stable edge count
+  (one count per round, which also materializes the checkpoint) and a
+  star-forest edge set (``_is_star_forest`` — a fixed point of both star
+  ops, so the round that reaches it is the last).
 
 At scale: all exchanges are on long node ids. A hot root (giant component)
-concentrates its O(degree) neighbor rows on one reducer — exactly what the
-former join-back step did — and the per-row work there is a running min,
-never a pairwise blowup.
-
-Small graphs finish on the driver: the loop's per-round job latency is the
-whole cost at a few thousand edges, so up to ``LOCAL_MAX_EDGES`` edges are
-collected and labelled by a numpy union-find. The limit is a constant, not a
-config field: both paths label identically, so it only bounds driver memory
-(about 16 MB of Arrow).
+concentrates its O(degree) neighbor rows on one reducer, and the per-row
+work there is a running min, never a pairwise blowup.
 """
 
 from __future__ import annotations
@@ -121,27 +124,17 @@ def _local_components(u: np.ndarray, v: np.ndarray) -> pd.DataFrame:
             lab = nxt
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 50, catalog=None
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """Labels (node, component) for every node appearing in ``edges``;
     component = min node id of the component (deterministic labeling,
     mirrors SURVEY.md §5.2 "min-member-id labeled partitions").
 
     At most ``LOCAL_MAX_EDGES`` canonical edges (or none) are labelled on the
     driver; more run the large-star/small-star loop, which raises
-    ``RuntimeError`` if not converged after ``max_iter`` rounds.
-
-    ``catalog``: optional ``SnapshotCatalog`` — the per-round frontier pin
-    then routes through reliable storage (resumable after executor loss on
-    a real cluster) instead of ``localCheckpoint`` (unreplicated executor
-    blocks; the local-mode fast path, one driver action per round)."""
-    from product_deduplication_spark.operators.canonical import pin
-
-    if catalog is not None:
-        e = pin(_canonical(edges), catalog, "pin_cc_frontier")
-    else:
-        e = _canonical(edges).localCheckpoint(eager=True)
+    ``RuntimeError`` if not converged after ``max_iter`` rounds."""
+    # eager: the driver/loop split below reads the edges once, and the loop
+    # starts from these rows instead of re-running the lineage above
+    e = _canonical(edges).localCheckpoint(eager=True)
     small = e.limit(LOCAL_MAX_EDGES + 1).toArrow()
     if small.num_rows <= LOCAL_MAX_EDGES:
         labels = _local_components(small["u"].to_numpy(), small["v"].to_numpy())
@@ -149,14 +142,10 @@ def connected_components(
     prev_n = None
     for _ in range(max_iter):
         e = _canonical(_large_star(e), by_u=True)
-        e = _canonical(_small_star(e))
-        if catalog is not None:
-            e = pin(e, catalog, "pin_cc_frontier")
-        else:
-            # lazy checkpoint: the count action below materializes it, so a
-            # round costs ONE driver round-trip, not two (per-round driver
-            # latency is the main serial fraction at high core counts)
-            e = e.localCheckpoint(eager=False)
+        # lazy checkpoint: the count action below materializes it, so a
+        # round costs ONE driver round-trip, not two (per-round driver
+        # latency is the main serial fraction at high core counts)
+        e = _canonical(_small_star(e)).localCheckpoint(eager=False)
         # stable edge COUNT is a cheap necessary condition for convergence;
         # only then pay the star-forest check (sufficient: a star forest is
         # a fixed point, see _is_star_forest — the round that REACHES the

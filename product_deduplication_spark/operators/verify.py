@@ -22,6 +22,11 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from product_deduplication_spark.config import DedupConfig
 
+# smallest shingle set whose 126-bin signature estimate the prefilter trusts
+# (measured sd in config.prefilter_margin's comment); pairs with a smaller
+# end skip the estimate and go straight to exact Jaccard
+N_MIN = 100
+
 
 def _sig32(col):
     """Signature narrowed to 32-bit ints for the ESTIMATE joins — halves the
@@ -52,8 +57,10 @@ def verify_pairs(
     runs in the same stage, so no per-candidate shingle bytes cross a
     further exchange), (3) the SURVIVORS re-join the src side for shingles.
     Identical byte profile to the former separate-prefilter four-join chain
-    — per-candidate intermediates still carry only signatures until the
-    estimate filter — at one join / three stages less fixed latency."""
+    — per-candidate intermediates still carry only signatures (and the src
+    set size) until the estimate filter — at one join / three stages less
+    fixed latency. The estimate only filters pairs whose smaller shingle set
+    has at least ``N_MIN`` elements; below that it is too noisy to trust."""
     if cfg.prefilter_margin is None:
         feat = features.select(F.col(id_col).alias("_fid"), F.col("shingles").alias("_sh"))
         a = feat.withColumnRenamed("_fid", "src").withColumnRenamed("_sh", "_sh_a")
@@ -61,7 +68,9 @@ def verify_pairs(
         joined = pairs.join(a.hint("merge"), "src").join(b.hint("merge"), "dst")
     else:
         sig_a = features.select(
-            F.col(id_col).alias("src"), _sig32(F.col("minhash")).alias("_sig_a")
+            F.col(id_col).alias("src"),
+            _sig32(F.col("minhash")).alias("_sig_a"),
+            F.size("shingles").alias("_n_a"),
         )
         b_side = features.select(
             F.col(id_col).alias("dst"),
@@ -83,7 +92,9 @@ def verify_pairs(
         joined = (
             pairs.join(sig_a.hint("merge"), "src")
             .join(b_side.hint("merge"), "dst")
-            .where(est >= F.lit(cutoff))
+            .where(
+                (F.least("_n_a", F.size("_sh_b")) < N_MIN) | (est >= F.lit(cutoff))
+            )
             .select("src", "dst", "_sh_b")
             .join(sh_a.hint("merge"), "src")
         )

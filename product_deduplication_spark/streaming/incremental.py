@@ -40,10 +40,6 @@ half-written features/clusters rows are superseded by doc_id-dedup /
 latest-wins on read. (The round-2 ordering wrote DOCS first; a crash after
 it left resubmitted docs permanently unclustered, because delta mode
 assumes every DOCS member already has an assignment.)
-
-``foreach_batch_dedup`` wraps this as a Structured Streaming sink
-(``writeStream.foreachBatch``) so a stream of page snapshots continuously
-maintains the cluster table.
 """
 
 from __future__ import annotations
@@ -70,6 +66,12 @@ CLUSTERS_STAGE = "inc_clusters"
 FORMAT_VERSION = 3
 
 
+def _latest_per_doc(union: DataFrame) -> DataFrame:
+    """One row per doc_id: the one with the highest ``batch_seq``."""
+    w = Window.partitionBy("doc_id").orderBy(F.desc("batch_seq"))
+    return union.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
+
+
 def read_clusters(catalog: SnapshotCatalog) -> DataFrame:
     """Current full assignment from the delta snapshots: latest-wins per
     doc_id by ``batch_seq`` (the Iceberg-style merge-on-read). Reads the
@@ -79,12 +81,7 @@ def read_clusters(catalog: SnapshotCatalog) -> DataFrame:
     if not entries:
         raise FileNotFoundError(f"no snapshot for stage {CLUSTERS_STAGE!r}")
     union = catalog.spark.read.parquet(*[e["path"] for e in entries])
-    w = Window.partitionBy("doc_id").orderBy(F.desc("batch_seq"))
-    return (
-        union.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "batch_seq")
-    )
+    return _latest_per_doc(union).drop("batch_seq")
 
 
 def _check_format(catalog: SnapshotCatalog) -> None:
@@ -162,12 +159,7 @@ def compact_deltas(catalog: SnapshotCatalog) -> None:
             continue
         union = catalog.spark.read.parquet(*[e["path"] for e in deltas])
         if stage == CLUSTERS_STAGE:
-            w = Window.partitionBy("doc_id").orderBy(F.desc("batch_seq"))
-            merged = (
-                union.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1)
-                .drop("_rn")
-            )
+            merged = _latest_per_doc(union)
         else:
             merged = union.dropDuplicates(["doc_id"])
         catalog.write_stage(
@@ -229,8 +221,8 @@ def incremental_dedup(
         )
 
     # every cache this batch creates (features + candidate_pairs internals)
-    # is released before returning — a streaming job runs this once per
-    # micro-batch in one long-lived session, so leaked CacheManager entries
+    # is released before returning — an ingest loop runs this once per
+    # batch in one long-lived session, so leaked CacheManager entries
     # would accumulate unboundedly (see caching.py)
     scope = CacheScope()
     # feature reuse: hash ONLY the new docs run_dedup would hash. Persisted
@@ -323,17 +315,3 @@ def incremental_dedup(
             else:
                 compact_deltas(catalog)
     return read_clusters(catalog)
-
-
-def foreach_batch_dedup(catalog_root: str, cfg: DedupConfig | None = None):
-    """Structured Streaming sink: ``stream.writeStream.foreachBatch(
-    foreach_batch_dedup('/work'))`` — each micro-batch of new pages folds
-    into the cluster state transactionally (one catalog snapshot per batch).
-    """
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        cat = SnapshotCatalog(spark, catalog_root)
-        incremental_dedup(spark, cat, batch_df, cfg)
-
-    return _sink

@@ -95,58 +95,6 @@ def test_assign_clusters_includes_singletons(spark):
     assert rows == {1: 1, 2: 1, 99: 99}
 
 
-def test_catalog_backed_pins_match_local_checkpoint(spark, tmp_path, monkeypatch):
-    """Cluster-safe mode: routing the CC frontier and the two-pass id/cumsum
-    pins through SnapshotCatalog (reliable storage) must produce output
-    identical to the localCheckpoint fast path. CC is forced onto the loop,
-    the path that pins a frontier every round."""
-    from pyspark.sql import functions as F
-
-    from product_deduplication_spark.catalog import SnapshotCatalog
-    from product_deduplication_spark.operators.canonical import (
-        assign_sequential_ids,
-        ordered_cumsum,
-    )
-
-    monkeypatch.setattr(cc, "LOCAL_MAX_EDGES", 0)
-    cat = SnapshotCatalog(spark, str(tmp_path / "pins"))
-    rng = random.Random(7)
-    edges = spark.createDataFrame(
-        [(rng.randrange(200), rng.randrange(200)) for _ in range(300)],
-        "src long, dst long",
-    )
-    local = {(r["node"], r["component"]) for r in connected_components(edges).collect()}
-    durable = {
-        (r["node"], r["component"])
-        for r in connected_components(edges, catalog=cat).collect()
-    }
-    assert local == durable
-    # the pins left lineage in the manifest (per-partition rows recorded)
-    assert any(e["stage"] == "pin_cc_frontier" for e in cat.snapshots())
-
-    rows = spark.createDataFrame(
-        [(i, float((i * 37) % 100)) for i in range(500)], "k long, v double"
-    )
-    ids_local = {
-        (r["k"], r["seq_id"])
-        for r in assign_sequential_ids(rows, ["k"], "seq_id").collect()
-    }
-    ids_cat = {
-        (r["k"], r["seq_id"])
-        for r in assign_sequential_ids(rows, ["k"], "seq_id", catalog=cat).collect()
-    }
-    assert ids_local == ids_cat
-
-    cs_local, tot_local = ordered_cumsum(rows, [F.desc("v"), F.asc("k")], "v", "c")
-    cs_cat, tot_cat = ordered_cumsum(
-        rows, [F.desc("v"), F.asc("k")], "v", "c", catalog=cat
-    )
-    assert tot_local == tot_cat
-    assert {(r["k"], round(r["c"], 6)) for r in cs_local.collect()} == {
-        (r["k"], round(r["c"], 6)) for r in cs_cat.collect()
-    }
-
-
 def test_simhash_disabled_features_fail_loudly_in_simhash_join(spark):
     """simhash=False emits NULL fingerprints; feeding such features to
     simhash_candidate_pairs must raise, not silently collide every doc in

@@ -1,6 +1,7 @@
 """Every entry point gives the same input the same meaning: ``run_dedup``,
 ``incremental_dedup`` (bootstrap and delta batches) and the spark-submit job
-agree on corpora of NULL, empty, short and exact-duplicate texts."""
+agree on an empty corpus and on corpora of NULL, empty, short and
+exact-duplicate texts."""
 
 from __future__ import annotations
 
@@ -10,6 +11,8 @@ import subprocess
 import sys
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from product_deduplication_spark.catalog import SnapshotCatalog
@@ -51,7 +54,9 @@ def _job(tmp_path, pdf) -> tuple[dict, str]:
     """Runs the spark-submit job on ``pdf``; returns its summary line and
     its catalog root."""
     inp = str(tmp_path / "input.parquet")
-    pdf.to_parquet(inp, index=False)
+    # explicit: pandas writes the object columns of an empty frame as nulls
+    schema = pa.schema([("url", pa.string()), ("text", pa.string())])
+    pq.write_table(pa.Table.from_pandas(pdf, schema=schema, preserve_index=False), inp)
     workdir = str(tmp_path / "job")
     cmd = [
         sys.executable, os.path.join(_REPO, "jobs", "run_pipeline.py"),
@@ -61,6 +66,15 @@ def _job(tmp_path, pdf) -> tuple[dict, str]:
     out = subprocess.run(cmd, capture_output=True, text=True, timeout=600, env=env)
     assert out.returncode == 0, out.stderr[-2000:]
     return json.loads(out.stdout.strip().splitlines()[-1]), workdir
+
+
+def _cluster_counts(spark, tmp_path, pdf) -> tuple[int, int, int]:
+    """Cluster counts from ``run_dedup``, a bootstrap ``incremental_dedup``
+    and the job, in that order."""
+    batch = len(_batch_partition(spark, pdf))
+    bootstrap = len(_incremental_partition(spark, str(tmp_path / "inc"), [pdf]))
+    job, _ = _job(tmp_path, pdf)
+    return batch, bootstrap, job["clusters"]
 
 
 def _docs(texts) -> pd.DataFrame:
@@ -80,10 +94,7 @@ def test_null_and_empty_texts_stay_singletons_at_every_entry_point(spark, tmp_pa
         "sports results from the weekend league fixtures",
         "recipe for a simple tomato soup with basil",
     ])
-    batch = len(_batch_partition(spark, pdf))
-    bootstrap = len(_incremental_partition(spark, str(tmp_path / "inc"), [pdf]))
-    job, _ = _job(tmp_path, pdf)
-    assert (batch, bootstrap, job["clusters"]) == (10, 10, 10)
+    assert _cluster_counts(spark, tmp_path, pdf) == (10, 10, 10)
 
 
 SHORT = "the quick brown fox jumps over the lazy dog"
@@ -124,3 +135,18 @@ def test_exact_duplicates_cluster_alike_at_every_entry_point(spark, tmp_path):
     assert _incremental_partition(spark, str(tmp_path / "inc"), [pdf]) == want
     job, workdir = _job(tmp_path, pdf)
     assert _partition(SnapshotCatalog(spark, workdir).read_stage("s6_clusters")) == want
+
+
+@pytest.mark.slow
+def test_empty_corpus_gives_no_clusters_at_every_entry_point(spark, tmp_path):
+    assert _cluster_counts(spark, tmp_path, _docs([])) == (0, 0, 0)
+
+
+@pytest.mark.slow
+def test_empty_delta_leaves_the_assignment_unchanged(spark, tmp_path):
+    cat = SnapshotCatalog(spark, str(tmp_path / "inc"))
+    pdf = _docs([LONG, LONG + " today", SHORT, SHORT])
+    cols = ["url", "doc_id", "cluster_id", "is_winner"]
+    before = set(incremental_dedup(spark, cat, _frame(spark, pdf), CFG).select(cols).collect())
+    after = incremental_dedup(spark, cat, _frame(spark, _docs([])), CFG).select(cols).collect()
+    assert set(after) == before and len(after) == len(before) == 4

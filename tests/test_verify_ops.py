@@ -3,12 +3,14 @@ title-case parity."""
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
 from product_deduplication_spark.config import DedupConfig
+from product_deduplication_spark.functions import hashing
 from product_deduplication_spark.functions.features import with_features
 from product_deduplication_spark.functions.normalize import title_case
-from product_deduplication_spark.operators.verify import verify_pairs
+from product_deduplication_spark.operators.verify import N_MIN, verify_pairs
 
 
 def _feats_and_pairs(spark, texts, cfg):
@@ -45,7 +47,8 @@ def test_candidate_cap_per_doc(spark):
 
 def test_prefilter_never_drops_threshold_pairs(spark):
     """Prefilter on vs off must yield identical verified edges (the margin
-    is 7 sigma — this is the practical check of that claim)."""
+    is at least 6 sigma where the filter applies — this is the practical
+    check of that claim)."""
     rng_texts = [
         ("hello world this is a long document about spark and data " * 3) + f"v{i}"
         for i in range(10)
@@ -58,6 +61,38 @@ def test_prefilter_never_drops_threshold_pairs(spark):
     off = {(r["src"], r["dst"]) for r in verify_pairs(pairs, feats, cfg_off).collect()}
     assert on == off
     assert on  # some near pairs exist
+
+
+def test_prefilter_keeps_short_near_copies(spark):
+    """Pairs of 20-shingle sets at Jaccard 18/22 = 0.82: their 126-bin OPH
+    estimate has sd ~0.08, so some read below the 0.55 cutoff. Every pair
+    must still be verified, because the estimate is only trusted when both
+    sets have at least ``N_MIN`` shingles. Two more pairs with fabricated
+    disagreeing signatures pin that boundary: identical sets below
+    ``N_MIN`` are kept, identical sets at ``N_MIN`` are filtered."""
+    cfg = DedupConfig(shuffle_partitions=4)
+    rng = np.random.default_rng(0)
+    sets = []
+    for _ in range(600):
+        u = rng.choice(2**32, size=22, replace=False).astype(np.uint32)
+        sets += [np.unique(u[:20]), np.unique(u[2:])]
+    sigs = list(hashing.oph_signatures(sets, hashing.minhash_seeds(cfg.num_hashes, cfg.seed)))
+    # the estimate verify computes, on 31-bit truncated signatures
+    est = [np.mean((a & 0x7FFFFFFF) == (b & 0x7FFFFFFF)) for a, b in zip(sigs[::2], sigs[1::2])]
+    assert min(est) < cfg.jaccard_threshold - cfg.prefilter_margin
+
+    small, big = np.arange(20, dtype=np.uint32), np.arange(N_MIN, dtype=np.uint32)
+    sets += [small, small, big, big]
+    sigs += [np.arange(cfg.num_hashes), np.arange(cfg.num_hashes) + 1000] * 2
+    feats = spark.createDataFrame(
+        [(i, sh.view(np.int32).tolist(), sig.tolist()) for i, (sh, sig) in enumerate(zip(sets, sigs))],
+        "doc_id long, shingles array<int>, minhash array<long>",
+    )
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, len(sets), 2)], "src long, dst long"
+    )
+    got = {r["src"] for r in verify_pairs(pairs, feats, cfg).collect()}
+    assert got == set(range(0, len(sets) - 2, 2))
 
 
 def test_title_case_variants(spark):
