@@ -18,20 +18,28 @@ Layout:
 
 Each manifest line:
     {snapshot_id, parent_id, stage, created_ms, rows, n_partitions,
-     partition_rows: {pid: rows}, metrics: {...}}
+     partition_rows: {task id: rows}, schema, metrics: {...}, path,
+     replaces_prior, replaces_ids}
 
-``partition_rows`` is the per-partition lineage record (computed with
-``spark_partition_id`` — one count agg, no collect of data).
+``partition_rows`` is the per-partition lineage record: rows per write task,
+summed from the ``num_rows`` of the Parquet footers of the part files the
+write produced (Iceberg analog: a manifest's per-file ``record_count``), so
+it costs no Spark job. ``schema`` is the written frame's schema as Spark
+JSON; every read passes it to the reader instead of inferring it from the
+files, which would cost a Spark job per read.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class ConcurrentSnapshotError(RuntimeError):
@@ -40,6 +48,22 @@ class ConcurrentSnapshotError(RuntimeError):
     (Iceberg analog: a commit conflict on the table's current snapshot id).
     The attempted write left only an orphan data directory — catalog state
     is untouched; the caller may re-read and retry."""
+
+
+def _footer_lineage(path: str) -> dict[str, int]:
+    """Rows per write task of the Parquet directory ``path``, read from the
+    part files' footers on the driver. Spark names each file
+    ``part-<task id>-<uuid>-c<n>...``; a task that ``maxRecordsPerFile``
+    split into several files is summed under its one id. Files with no rows
+    are left out: Spark writes one empty part file for an empty frame, which
+    therefore reads ``{}``."""
+    rows: dict[str, int] = {}
+    for f in sorted(glob.glob(os.path.join(path, "part-*"))):
+        n = pq.read_metadata(f).num_rows
+        if n:
+            task = str(int(os.path.basename(f).split("-")[1]))
+            rows[task] = rows.get(task, 0) + n
+    return rows
 
 
 class SnapshotCatalog:
@@ -106,8 +130,11 @@ class SnapshotCatalog:
         replaces_ids: list[str] | None = None,
         expected_latest_id: str | None | bool = False,
     ) -> dict:
-        """Persist a stage output as a new snapshot; records per-partition
-        lineage (rows per partition) + caller metrics in the manifest.
+        """Persist a stage output as a new snapshot; records its schema,
+        per-partition lineage and caller metrics in the manifest.
+        ``partition_rows`` maps each write task's id to the rows it wrote,
+        taken from the part files' footers (:func:`_footer_lineage`), so the
+        write is the only Spark job this call starts.
 
         ``replaces_prior=True`` marks a full compaction rewrite: the
         snapshot holds the stage's FULL current state and
@@ -140,13 +167,7 @@ class SnapshotCatalog:
                     "another writer committed since this compaction read its "
                     "input; aborting (orphan data dir only, state untouched)"
                 )
-        written = self.spark.read.parquet(path)
-        part_rows = {
-            str(r["_pid"]): r["n"]
-            for r in written.groupBy(F.spark_partition_id().alias("_pid"))
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
+        part_rows = _footer_lineage(path)
         entry = {
             "snapshot_id": snapshot_id,
             "parent_id": parent["snapshot_id"] if parent else None,
@@ -155,6 +176,7 @@ class SnapshotCatalog:
             "rows": int(sum(part_rows.values())),
             "n_partitions": len(part_rows),
             "partition_rows": part_rows,
+            "schema": df.schema.json(),
             "metrics": metrics or {},
             "path": path,
             "replaces_prior": replaces_prior,
@@ -175,7 +197,33 @@ class SnapshotCatalog:
         entries = self.active_snapshots(stage)
         if not entries:
             raise FileNotFoundError(f"no snapshot for stage {stage!r}")
-        return self.spark.read.parquet(*[e["path"] for e in entries])
+        return self.read_entries(entries)
+
+    def read_entries(self, entries: list[dict]) -> DataFrame:
+        """One lazy read of the snapshots ``entries`` with the schema their
+        manifest lines carry (no inference job). Refuses an entry without a
+        schema (written by older code) and entries whose schemas differ:
+        with a given schema, a column missing from one snapshot would
+        silently read as NULL."""
+        for e in entries:
+            if "schema" not in e:
+                raise RuntimeError(
+                    f"snapshot {e['snapshot_id']!r} of stage {e['stage']!r} has no "
+                    "schema in the manifest: it was written by older code. "
+                    "Rebuild the catalog."
+                )
+        schemas = [StructType.fromJson(json.loads(e["schema"])) for e in entries]
+        # Parquet columns are matched by name and read back nullable, so
+        # neither column order nor nullability makes two schemas differ
+        columns = [sorted((f.name, f.dataType.simpleString()) for f in s) for s in schemas]
+        for e, cols in zip(entries, columns):
+            if cols != columns[0]:
+                raise RuntimeError(
+                    f"snapshot {e['snapshot_id']!r} of stage {e['stage']!r} has "
+                    f"columns {cols}, but snapshot {entries[0]['snapshot_id']!r} "
+                    f"has {columns[0]}"
+                )
+        return self.spark.read.schema(schemas[0]).parquet(*[e["path"] for e in entries])
 
     def read_stage(self, stage: str, snapshot_id: str | None = None) -> DataFrame:
         if snapshot_id is None:
@@ -187,7 +235,7 @@ class SnapshotCatalog:
             if not matches:
                 raise FileNotFoundError(f"snapshot {snapshot_id!r} not found for {stage!r}")
             entry = matches[0]
-        return self.spark.read.parquet(entry["path"])
+        return self.read_entries([entry])
 
     def get_or_compute(
         self, stage: str, compute, metrics: dict | None = None, force: bool = False
@@ -197,5 +245,4 @@ class SnapshotCatalog:
         returning a DataFrame."""
         if not force and self.has_stage(stage):
             return self.read_stage(stage)
-        self.write_stage(compute(), stage, metrics)
-        return self.read_stage(stage)
+        return self.read_entries([self.write_stage(compute(), stage, metrics)])

@@ -23,6 +23,16 @@ circuit) at webtext scale:
    (doc→cluster_id edges keep old clusters intact and merge them when a
    new doc bridges two), then connected components reassign.
 
+**The batch's new docs are computed once.** ``truly_new`` is the batch
+minus the urls that already have a committed DOCS row (the anti-join runs
+only against the DOCS urls, so their doc_id dedup is not needed). It is
+materialized with one eager ``localCheckpoint`` and then read by features,
+exact, the LSH delta ids, the CC docs and the CLUSTERS and DOCS snapshot
+writes; otherwise each of those would re-run the source scan and the
+anti-join. Snapshot reads take their schema from the manifest and
+snapshot lineage comes from Parquet footers (``catalog.py``), so the
+catalog's own bookkeeping starts no Spark job.
+
 **Every stage is a delta stage.** DOCS/FEATURES snapshots hold only the
 batch's new rows; CLUSTERS snapshots hold only assignments that CHANGED
 this batch (new docs + old docs whose cluster_id or winner flag flipped via
@@ -60,10 +70,11 @@ DOCS_STAGE = "inc_docs"
 FEATURES_STAGE = "inc_features"
 CLUSTERS_STAGE = "inc_clusters"
 # catalog layout version. 2 = all-delta stages + batch_seq'd clusters +
-# precomputed band hashes in features; 3 = 32-bit shingle sets (array<int>).
+# precomputed band hashes in features; 3 = 32-bit shingle sets (array<int>);
+# 4 = every snapshot's schema in its manifest line (reads infer nothing).
 # Catalogs written by older code would silently corrupt state (or fail the
 # features union with a type mismatch) — refuse loudly instead.
-FORMAT_VERSION = 3
+FORMAT_VERSION = 4
 
 
 def _latest_per_doc(union: DataFrame) -> DataFrame:
@@ -80,8 +91,7 @@ def read_clusters(catalog: SnapshotCatalog) -> DataFrame:
     entries = catalog.active_snapshots(CLUSTERS_STAGE)
     if not entries:
         raise FileNotFoundError(f"no snapshot for stage {CLUSTERS_STAGE!r}")
-    union = catalog.spark.read.parquet(*[e["path"] for e in entries])
-    return _latest_per_doc(union).drop("batch_seq")
+    return _latest_per_doc(catalog.read_entries(entries)).drop("batch_seq")
 
 
 def _check_format(catalog: SnapshotCatalog) -> None:
@@ -91,10 +101,9 @@ def _check_format(catalog: SnapshotCatalog) -> None:
         raise RuntimeError(
             f"incremental catalog at {catalog.root!r} has format {fmt!r}, this "
             f"code writes format {FORMAT_VERSION}: old snapshots lack the "
-            "precomputed band-hash column and use full-rewrite clusters "
-            "snapshots. Rebuild the catalog (re-run bootstrap) or migrate: "
-            "recompute features with with_features and rewrite clusters "
-            "as a batch_seq=0 delta."
+            "schema in their manifest lines (format < 4), the precomputed "
+            "band-hash column or delta clusters snapshots. Rebuild the "
+            "catalog (re-run bootstrap)."
         )
 
 
@@ -157,7 +166,7 @@ def compact_deltas(catalog: SnapshotCatalog) -> None:
         deltas = [e for e in active if not e.get("replaces_prior")]
         if len(deltas) < 2:
             continue
-        union = catalog.spark.read.parquet(*[e["path"] for e in deltas])
+        union = catalog.read_entries(deltas)
         if stage == CLUSTERS_STAGE:
             merged = _latest_per_doc(union)
         else:
@@ -197,24 +206,24 @@ def incremental_dedup(
     # DOCS is the commit marker (written LAST) — its presence defines both
     # bootstrap and which docs count as already-processed
     bootstrap = not catalog.has_stage(DOCS_STAGE)
+    # truly_new is materialized once (module docstring): every consumer
+    # below reads the checkpoint instead of re-running the source scan and
+    # the anti-join
     if bootstrap:
-        all_docs = new_prepared
-        old_feats = None
-        old_assign = None
-        prior_edges = None
-        truly_new = new_prepared
+        truly_new = all_docs = new_prepared.localCheckpoint()
+        old_feats = old_assign = prior_edges = None
     else:
         _check_format(catalog)
+        old_docs = catalog.read_stage_union(DOCS_STAGE)
+        # idempotence: drop re-submitted urls that COMMITTED (have a DOCS row)
+        truly_new = new_prepared.join(old_docs.select("url"), "url", "left_anti").localCheckpoint()
         # union of ALL prior delta snapshots — not just the latest batch
         # (a batch-3 doc must still LSH-collide with a batch-1 doc).
         # dropDuplicates(doc_id): a crash between FEATURES and DOCS writes
         # leaves the retried batch's features twice across snapshots.
-        old_docs = catalog.read_stage_union(DOCS_STAGE).dropDuplicates(["doc_id"])
         old_feats = catalog.read_stage_union(FEATURES_STAGE).dropDuplicates(["doc_id"])
         old_assign = read_clusters(catalog)
-        # idempotence: drop re-submitted urls that COMMITTED (have a DOCS row)
-        truly_new = new_prepared.join(old_docs.select("url"), "url", "left_anti")
-        all_docs = old_docs.unionByName(truly_new)
+        all_docs = old_docs.dropDuplicates(["doc_id"]).unionByName(truly_new)
         # prior assignments as edges keep existing clusters connected
         prior_edges = old_assign.select(
             F.col("doc_id").alias("src"), F.col("cluster_id").alias("dst")

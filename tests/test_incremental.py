@@ -299,3 +299,29 @@ def test_auto_compaction_triggers_on_snapshot_count(spark, tmp_path):
     # after exceeding the threshold, active lists were truncated
     assert len(cat.active_snapshots(inc.CLUSTERS_STAGE)) <= 3
     assert any(e.get("replaces_prior") for e in cat.snapshots(inc.CLUSTERS_STAGE))
+
+
+# Spark jobs started by one delta batch that ends in a full compaction (the
+# corpus below, local[8], 8 shuffle partitions). It was 94-95 while
+# write_stage read each snapshot back to count rows per partition, every
+# catalog read inferred its schema with a job, and the batch's new-doc
+# anti-join was recomputed by each of its consumers; 49-50 (it differs
+# between sessions, by AQE's runtime plan choices) with lineage from Parquet
+# footers, schemas from the manifest and the new docs materialized once. The
+# bound leaves two jobs of that slack. A job costs ~0.1 s of scheduling on a
+# 4-CPU host, whatever its size.
+DELTA_BATCH_JOBS = 52
+
+
+def test_delta_batch_job_count(spark, tmp_path, count_jobs):
+    docs, _ = generate_web_documents(n_base_docs=40, seed=5)
+    n = len(docs)
+    batches = [docs.iloc[: n - 20], docs.iloc[n - 20 : n - 10], docs.iloc[n - 10 :]]
+    cat = SnapshotCatalog(spark, str(tmp_path / "inc_jobs"))
+    for b in batches:
+        _, jobs = count_jobs(lambda: incremental_dedup(
+            spark, cat, spark.createDataFrame(b[["url", "text"]]), CFG,
+            auto_compact=1, compact_tier_fraction=0.0,
+        ))
+    assert cat.snapshots(DOCS_STAGE)[-1]["replaces_prior"]  # ended in a compaction
+    assert jobs <= DELTA_BATCH_JOBS

@@ -7,8 +7,10 @@ import json
 import os
 import subprocess
 import sys
+from collections import Counter
 
 import pytest
+from pyspark.sql import functions as F
 
 from product_deduplication_spark.catalog import SnapshotCatalog
 
@@ -44,6 +46,121 @@ def test_get_or_compute_resumes_without_recompute(spark, tmp_path):
     b = cat.get_or_compute("s", compute)
     assert len(calls) == 1  # second call resumed from snapshot
     assert a.count() == b.count() == 5
+
+
+def _task_rows(df):
+    """Rows per partition of ``df``: what each write task of it writes."""
+    return {str(r["p"]): r["n"] for r in df.groupBy(F.spark_partition_id().alias("p")).agg(
+        F.count("*").alias("n")).collect()}
+
+
+@pytest.mark.parametrize("max_records", [0, 100], ids=["one_file_per_task", "split_files"])
+def test_lineage_is_rows_per_write_task(spark, tmp_path, max_records):
+    """``maxRecordsPerFile`` 100 makes every task write several files; their
+    rows are summed under the task's id."""
+    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
+    df = spark.range(1000).withColumnRenamed("id", "v").repartition(4)
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", str(max_records))
+    try:
+        entry = cat.write_stage(df, "s")
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    files_per_task = Counter(f.split("-")[1] for f in os.listdir(entry["path"]) if f.startswith("part-"))
+    assert len(files_per_task) == 4
+    assert all((n > 1) == (max_records > 0) for n in files_per_task.values())
+    want = _task_rows(df)
+    assert len(want) == 4
+    assert entry["partition_rows"] == want
+    assert (entry["rows"], entry["n_partitions"]) == (1000, 4)
+
+
+def test_lineage_of_an_empty_write(spark, tmp_path):
+    """Spark writes one empty part file for an empty frame; it counts for no
+    task, as the count aggregate it replaces gave no group."""
+    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
+    entry = cat.write_stage(spark.range(10).where("id < 0"), "s")
+    assert [f for f in os.listdir(entry["path"]) if f.startswith("part-")]
+    assert (entry["rows"], entry["n_partitions"], entry["partition_rows"]) == (0, 0, {})
+    back = cat.read_stage("s")
+    assert back.count() == 0 and back.columns == ["id"]
+
+
+def test_read_uses_the_manifest_schema(spark, tmp_path):
+    """A read with the manifest's schema equals schema inference from the
+    files: every column nullable, nested types included."""
+    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
+    df = spark.range(20).select(
+        F.col("id").alias("doc_id"),
+        F.array(F.col("id").cast("int")).alias("shingles"),
+        (F.col("id") % 2 == 0).alias("flag"),
+        F.lit("t").alias("text"),
+    )
+    entry = cat.write_stage(df, "s")
+    assert entry["schema"] == df.schema.json()
+    assert cat.read_stage("s").schema == spark.read.parquet(entry["path"]).schema
+    assert sorted(cat.read_stage("s").collect()) == sorted(df.collect())
+
+
+def _drop_schema(cat, snapshot_id):
+    path = os.path.join(cat.root, "manifest.jsonl")
+    entries = [json.loads(line) for line in open(path)]
+    with open(path, "w") as f:
+        for e in entries:
+            if e["snapshot_id"] == snapshot_id:
+                del e["schema"]
+            f.write(json.dumps(e) + "\n")
+
+
+def test_snapshot_without_schema_is_refused(spark, tmp_path):
+    """Older code wrote no schema; reads refuse it instead of inferring."""
+    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
+    old = cat.write_stage(spark.range(5), "s")
+    cat.write_stage(spark.range(5), "s")
+    _drop_schema(cat, old["snapshot_id"])
+    with pytest.raises(RuntimeError, match=old["snapshot_id"]):
+        cat.read_stage_union("s")
+    with pytest.raises(RuntimeError, match=old["snapshot_id"]):
+        cat.read_stage("s", old["snapshot_id"])
+    cat.read_stage("s")  # the latest snapshot still has one
+
+
+def test_union_of_different_schemas_is_refused(spark, tmp_path):
+    """With a given schema a column missing from one snapshot would read as
+    NULL; a union of snapshots with different columns raises instead.
+    Column order alone is no difference."""
+    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
+    cat.write_stage(spark.range(3).select("id", F.lit("a").alias("t")), "s")
+    cat.write_stage(spark.range(3).select(F.lit("b").alias("t"), "id"), "s")
+    assert cat.read_stage_union("s").count() == 6
+    late = cat.write_stage(spark.range(3), "s")
+    with pytest.raises(RuntimeError, match=late["snapshot_id"]):
+        cat.read_stage_union("s")
+
+
+def test_catalog_reads_start_no_job(spark, tmp_path, count_jobs):
+    from product_deduplication_spark.streaming import incremental as inc
+
+    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
+    clusters = spark.createDataFrame(
+        [("u://1", 1, 0, True, 0)], "url string, doc_id long, cluster_id long, is_winner boolean, batch_seq int"
+    )
+    for _ in range(2):
+        cat.write_stage(clusters, inc.CLUSTERS_STAGE)
+    for read in (lambda: cat.read_stage(inc.CLUSTERS_STAGE),
+                 lambda: cat.read_stage_union(inc.CLUSTERS_STAGE),
+                 lambda: inc.read_clusters(cat)):
+        assert count_jobs(read)[1] == 0
+
+
+def test_write_stage_starts_only_the_write_jobs(spark, tmp_path, count_jobs):
+    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
+    df = spark.range(1000).withColumnRenamed("id", "v").repartition(4).groupBy(
+        (F.col("v") % 7).alias("k")).count()
+    _, bare = count_jobs(lambda: df.write.parquet(str(tmp_path / "bare")))
+    entry, jobs = count_jobs(lambda: cat.write_stage(df, "s"))
+    assert bare >= 1
+    assert jobs == bare
+    assert entry["rows"] == 7
 
 
 @pytest.mark.slow

@@ -2,17 +2,21 @@
 
 ``perfbench --trace 1`` labels each layer by replacing the functions named in
 ``perfbench.workloads.BATCH_LAYERS`` / ``INCREMENTAL_LAYERS`` on the
-``pipeline`` and ``streaming.incremental`` modules via ``getattr``. A
-refactor that renames or drops one of those imports would break traced runs
-only when they are next taken; this pins the names in the unit suite.
+``pipeline`` and ``streaming.incremental`` modules via ``getattr``, and the
+catalog layer by replacing methods on the ``SnapshotCatalog`` instance. A
+refactor that renames or drops one of those would break traced runs only
+when they are next taken; this pins the names in the unit suite.
 """
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
-from perfbench.workloads import BATCH_LAYERS, INCREMENTAL_LAYERS
+from perfbench.workloads import BATCH_LAYERS, INCREMENTAL_LAYERS, IncrementalCatalog
 from product_deduplication_spark import pipeline
+from product_deduplication_spark.catalog import SnapshotCatalog
 from product_deduplication_spark.streaming import incremental
 
 
@@ -23,3 +27,18 @@ from product_deduplication_spark.streaming import incremental
 )
 def test_trace_target_resolves(module, attr):
     assert callable(getattr(module, attr, None)), f"{module.__name__}.{attr} is missing"
+
+
+def test_catalog_trace_targets_resolve(spark, tmp_path):
+    """The traced catalog methods exist, and the entry ``write_stage``
+    returns carries the ``rows`` and ``path`` the tracer reads."""
+    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
+    workload = object.__new__(IncrementalCatalog)
+    workload.catalog = cat
+    attrs = [a for owner, a, _, _ in workload._targets() if owner is cat]
+    assert sorted(attrs) == ["read_stage_union", "write_stage"]
+    for attr in attrs:
+        assert callable(getattr(cat, attr, None)), f"SnapshotCatalog.{attr} is missing"
+    entry = cat.write_stage(spark.range(7), "s")
+    assert entry["rows"] == 7
+    assert os.path.isdir(entry["path"])
