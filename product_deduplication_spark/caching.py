@@ -24,13 +24,12 @@ from pyspark.sql import DataFrame
 
 class CacheScope:
     """Collects DataFrames persisted on behalf of a caller; ``release()``
-    unpersists them all. Use as a context manager when the materialization
-    happens inside the block::
+    unpersists them all. Release only after the results are materialized::
 
-        with CacheScope() as scope:
-            pairs = candidate_pairs(feats, cfg, scope=scope)
-            pairs.count()          # materialize while caches are live
-        # caches released here
+        scope = CacheScope()
+        pairs = candidate_pairs(feats, cfg, scope=scope)
+        pairs.count()          # materialize while caches are live
+        scope.release()
     """
 
     def __init__(self) -> None:
@@ -41,21 +40,10 @@ class CacheScope:
         self._cached.append(df)
         return df
 
-    def add(self, df: DataFrame) -> DataFrame:
-        """Register an already-persisted DataFrame for release."""
-        self._cached.append(df)
-        return df
-
     def release(self) -> None:
         for df in self._cached:
             df.unpersist()
         self._cached.clear()
-
-    def __enter__(self) -> "CacheScope":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.release()
 
 
 def persist_in(df: DataFrame, scope: CacheScope | None) -> DataFrame:

@@ -237,12 +237,10 @@ class SnapshotCatalog:
             entry = matches[0]
         return self.read_entries([entry])
 
-    def get_or_compute(
-        self, stage: str, compute, metrics: dict | None = None, force: bool = False
-    ) -> DataFrame:
+    def get_or_compute(self, stage: str, compute, metrics: dict | None = None) -> DataFrame:
         """Resume point: return the stage's latest snapshot if present,
         otherwise compute, persist, and return it. ``compute`` is a thunk
         returning a DataFrame."""
-        if not force and self.has_stage(stage):
+        if self.has_stage(stage):
             return self.read_stage(stage)
         return self.read_entries([self.write_stage(compute(), stage, metrics)])

@@ -13,9 +13,10 @@ exactly 1.0. (The earlier r=4 setting made EVERY s>=0.6 pair a candidate but
 admitted 0.3% of the n^2 background — measured 40x more candidates and a 10x
 slower verify stage at 18k docs.)
 
-The reference's analogous knobs: candidate cap ntop=25 / lower_bound=0
-(``reference/static.py:194``), fuzzy thresholds 95/90
-(``reference/groups_creation.py:37-39``).
+The reference's analogous knobs: fuzzy thresholds 95/90
+(``reference/groups_creation.py:37-39``). Its per-doc candidate cap ntop=25
+(``reference/static.py:194``) has no knob here: LSH bounds the candidate
+set structurally.
 """
 
 from __future__ import annotations
@@ -36,19 +37,10 @@ class DedupConfig:
     # (hashing.oph_signatures: one pass over the shingles); its Jaccard
     # estimate is property-tested for sets of at least num_hashes shingles
     jaccard_threshold: float = 0.8  # exact-Jaccard verify threshold
-    # minhash-estimate prefilter margin: candidates with estimated Jaccard
-    # below (threshold - margin) skip the expensive exact verify join.
-    # Measured sd of the 126-bin OPH estimate at Jaccard 0.8 (random sets,
-    # 3,000-10,000 trials each): 0.082 at 20 shingles, 0.058 at 40, 0.040
-    # at 100, 0.031 at 278. So a 0.25 margin is >= 6.2 sigma only from 100
-    # shingles up (20 shingles: 3 sigma, 12 of 3,000 true pairs dropped);
-    # verify.N_MIN applies the filter only to pairs whose smaller set has
-    # that many. Set to None to disable.
-    prefilter_margin: float | None = 0.25
 
     # --- SimHash ---------------------------------------------------------
-    simhash_bits: int = 64
-    simhash_chunks: int = 4     # pigeonhole chunks -> detects hamming <= chunks-1
+    # pigeonhole chunks of the 64-bit fingerprint -> detects hamming <= chunks-1
+    simhash_chunks: int = 4
     simhash_hamming_max: int = 3
 
     # --- skew / scale controls (SURVEY.md §4.1) -------------------------
@@ -56,9 +48,6 @@ class DedupConfig:
     # (boilerplate pages whose band hash collides for millions of docs) are
     # star-connected through their min doc_id instead of exploding O(n^2).
     bucket_cap: int = 64
-    # Optional per-doc candidate cap for reference parity (ntop=25,
-    # reference/static.py:194). None = unbounded (LSH bounds structurally).
-    candidate_cap_per_doc: int | None = None
     shuffle_partitions: int = 32
 
     # --- misc ------------------------------------------------------------
@@ -94,5 +83,5 @@ class DedupConfig:
 
 
 # The grocery-parity LSH config (char-3 shingles, 42x3 banding) lives in
-# parity.PARITY_CONFIG next to the pipeline that uses it; the reference's
-# top-25 candidate cap (reference/static.py:194) is `candidate_cap_per_doc`.
+# parity.PARITY_CONFIG next to the pipeline that uses it; the verify
+# prefilter's margin is verify.MARGIN, next to the sd it was measured from.

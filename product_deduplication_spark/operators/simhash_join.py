@@ -32,7 +32,7 @@ def simhash_candidate_pairs(
     features: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
 ) -> DataFrame:
     """(src, dst) candidate pairs with Hamming(simhash) <= cfg.simhash_hamming_max."""
-    width = cfg.simhash_bits // cfg.simhash_chunks
+    width = 64 // cfg.simhash_chunks  # the fingerprint is a 64-bit long
     # guard: features built with simhash=False carry NULL fingerprints —
     # banding them would be garbage-in (and a constant sentinel would
     # collide every doc into one bucket). Fail loudly, per row, JVM-side.

@@ -8,23 +8,29 @@ whole-stage codegen.
 Precision after this stage is exactly 1.0 w.r.t. the Jaccard threshold, so
 end-to-end recall is determined solely by candidate generation (LSH S-curve).
 
-Scale: three sort-merge joins of pairs↔features on long keys with the
-MinHash prefilter on (two without it; see :func:`verify_pairs`). The
-feature projections carry only doc_id, 32-bit signatures and shingles —
-column pruning keeps text/html out of the shuffle. Optional per-doc
-candidate cap reproduces the reference's ntop=25
-(``reference/static.py:194``) via a rank window.
+Scale: three sort-merge joins of pairs↔features on long keys, with a
+MinHash-estimate prefilter between the second and the third (see
+:func:`verify_pairs`). The feature projections carry only doc_id, 32-bit
+signatures and shingles — column pruning keeps text/html out of the
+shuffle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from product_deduplication_spark.config import DedupConfig
 
-# smallest shingle set whose 126-bin signature estimate the prefilter trusts
-# (measured sd in config.prefilter_margin's comment); pairs with a smaller
-# end skip the estimate and go straight to exact Jaccard
+# prefilter margin: candidates whose signature estimate of Jaccard is below
+# (threshold - MARGIN) skip the exact-Jaccard check. Measured sd of the
+# 126-bin OPH estimate at Jaccard 0.8 (random sets, 3,000-10,000 trials
+# each): 0.082 at 20 shingles, 0.058 at 40, 0.040 at 100, 0.031 at 278. So
+# the margin is >= 6.2 sigma only from 100 shingles up (20 shingles: 3
+# sigma, 12 of 3,000 true pairs dropped).
+MARGIN = 0.25
+# smallest shingle set whose estimate the prefilter trusts (the 6.2 sigma
+# above); pairs with a smaller end skip the estimate and go straight to
+# exact Jaccard
 N_MIN = 100
 
 
@@ -46,58 +52,45 @@ def verify_pairs(
     features: DataFrame,
     cfg: DedupConfig,
     id_col: str = "doc_id",
-    method: str = "minhash",
 ) -> DataFrame:
     """(src, dst, method, similarity) for pairs with exact Jaccard >= threshold.
 
-    Join structure with the prefilter on: THREE feature joins, not four —
-    (1) src side attaches the signature, (2) dst side attaches signature AND
-    shingles in one join (the shingles ride the features-side exchange,
-    whose bytes are O(corpus) and shipped either way; the estimate filter
-    runs in the same stage, so no per-candidate shingle bytes cross a
-    further exchange), (3) the SURVIVORS re-join the src side for shingles.
-    Identical byte profile to the former separate-prefilter four-join chain
-    — per-candidate intermediates still carry only signatures (and the src
-    set size) until the estimate filter — at one join / three stages less
-    fixed latency. The estimate only filters pairs whose smaller shingle set
-    has at least ``N_MIN`` elements; below that it is too noisy to trust."""
-    if cfg.prefilter_margin is None:
-        feat = features.select(F.col(id_col).alias("_fid"), F.col("shingles").alias("_sh"))
-        a = feat.withColumnRenamed("_fid", "src").withColumnRenamed("_sh", "_sh_a")
-        b = feat.withColumnRenamed("_fid", "dst").withColumnRenamed("_sh", "_sh_b")
-        joined = pairs.join(a.hint("merge"), "src").join(b.hint("merge"), "dst")
-    else:
-        sig_a = features.select(
-            F.col(id_col).alias("src"),
-            _sig32(F.col("minhash")).alias("_sig_a"),
-            F.size("shingles").alias("_n_a"),
-        )
-        b_side = features.select(
-            F.col(id_col).alias("dst"),
-            _sig32(F.col("minhash")).alias("_sig_b"),
-            F.col("shingles").alias("_sh_b"),
-        )
-        sh_a = features.select(
-            F.col(id_col).alias("src"), F.col("shingles").alias("_sh_a")
-        )
-        est = F.aggregate(
-            F.zip_with("_sig_a", "_sig_b", lambda x, y: (x == y).cast("int")),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        ) / F.lit(cfg.num_hashes)
-        cutoff = max(0.0, cfg.jaccard_threshold - cfg.prefilter_margin)
-        # merge hints: the feature sides grow with the corpus — never allow
-        # a (mis-estimated) broadcast of them (measured: a static broadcast of
-        # an array-carrying features relation aborted the driver at 370k docs)
-        joined = (
-            pairs.join(sig_a.hint("merge"), "src")
-            .join(b_side.hint("merge"), "dst")
-            .where(
-                (F.least("_n_a", F.size("_sh_b")) < N_MIN) | (est >= F.lit(cutoff))
-            )
-            .select("src", "dst", "_sh_b")
-            .join(sh_a.hint("merge"), "src")
-        )
+    Three feature joins: (1) the src side attaches the signature, (2) the
+    dst side attaches signature AND shingles in one join (the shingles ride
+    the features-side exchange, whose bytes are O(corpus) and shipped either
+    way; the estimate filter runs in the same stage, so no per-candidate
+    shingle bytes cross a further exchange), (3) the SURVIVORS re-join the
+    src side for shingles. Per-candidate intermediates carry only signatures
+    (and the src set size) until the estimate filter. The estimate only
+    filters pairs whose smaller shingle set has at least ``N_MIN``
+    elements; below that it is too noisy to trust."""
+    sig_a = features.select(
+        F.col(id_col).alias("src"),
+        _sig32(F.col("minhash")).alias("_sig_a"),
+        F.size("shingles").alias("_n_a"),
+    )
+    b_side = features.select(
+        F.col(id_col).alias("dst"),
+        _sig32(F.col("minhash")).alias("_sig_b"),
+        F.col("shingles").alias("_sh_b"),
+    )
+    sh_a = features.select(F.col(id_col).alias("src"), F.col("shingles").alias("_sh_a"))
+    est = F.aggregate(
+        F.zip_with("_sig_a", "_sig_b", lambda x, y: (x == y).cast("int")),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    ) / F.lit(cfg.num_hashes)
+    cutoff = max(0.0, cfg.jaccard_threshold - MARGIN)
+    # merge hints: the feature sides grow with the corpus — never allow
+    # a (mis-estimated) broadcast of them (measured: a static broadcast of
+    # an array-carrying features relation aborted the driver at 370k docs)
+    joined = (
+        pairs.join(sig_a.hint("merge"), "src")
+        .join(b_side.hint("merge"), "dst")
+        .where((F.least("_n_a", F.size("_sh_b")) < N_MIN) | (est >= F.lit(cutoff)))
+        .select("src", "dst", "_sh_b")
+        .join(sh_a.hint("merge"), "src")
+    )
     # |A ∪ B| = |A| + |B| - |A ∩ B| — exact for these arrays (shingle sets
     # are distinct by construction, _to_shingle32 returns np.unique), and it
     # skips materializing a |A|+|B|-element union array per candidate pair;
@@ -106,16 +99,8 @@ def verify_pairs(
     inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
     union = F.size("_sh_a") + F.size("_sh_b") - inter
     sim = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    out = (
+    return (
         joined.withColumn("similarity", sim)
         .where(F.col("similarity") >= F.lit(cfg.jaccard_threshold))
-        .select("src", "dst", F.lit(method).alias("method"), "similarity")
+        .select("src", "dst", F.lit("minhash").alias("method"), "similarity")
     )
-    if cfg.candidate_cap_per_doc is not None:
-        w = Window.partitionBy("src").orderBy(F.desc("similarity"), F.asc("dst"))
-        out = (
-            out.withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") <= cfg.candidate_cap_per_doc)
-            .drop("_rk")
-        )
-    return out

@@ -1039,9 +1039,9 @@ def q_dict_join_replace(spark, sf):
 
 
 def q_topn_per_key(spark, sf):
-    """O2 per-key candidate cap (ntop=25, reference/static.py:194 — the rank
-    window shape of verify.py's candidate_cap_per_doc), here top-3 orders
-    per customer."""
+    """O2 per-key candidate cap (ntop=25, reference/static.py:194: a rank
+    window per key), here top-3 orders per customer. The engine has no such
+    cap; LSH bounds its candidate set structurally."""
     o = _t(spark, sf, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
     return (

@@ -42,6 +42,10 @@ docs/features dedupe by doc_id, clusters resolve latest-wins by
 writes O(delta), never O(corpus) — the round-2 implementation rewrote the
 full assignment every batch.
 
+**Compaction** bounds that window with one merge body (:func:`_compact`):
+a full compaction rewrites a stage's active snapshots, a minor one only the
+deltas after its base.
+
 **Crash recovery.** Within a batch the write order is FEATURES → CLUSTERS →
 DOCS, and *idempotence keys off DOCS* (the last write = the commit marker):
 a resubmitted url is "new" until its DOCS row exists. A crash between any
@@ -107,66 +111,33 @@ def _check_format(catalog: SnapshotCatalog) -> None:
         )
 
 
-def _expected_latest(catalog: SnapshotCatalog, stage: str) -> str | None:
-    entry = catalog.latest(stage)
-    return entry["snapshot_id"] if entry else None
+def _compact(catalog: SnapshotCatalog, full: bool) -> None:
+    """The one compaction merge, stage by stage: read the stage's ACTIVE
+    snapshots (``full``) or only the deltas after its base (skipping a stage
+    with fewer than two), merge them the way the read path does — DOCS and
+    FEATURES by doc_id-dedup, CLUSTERS latest-wins per doc_id — and write
+    the merge as one snapshot that replaces what it read. CLUSTERS rows keep
+    their ``batch_seq``: every later delta is stamped
+    ``len(snapshots(CLUSTERS))``, larger than every seq already written, so
+    latest-wins on read is unchanged.
 
-
-def compact_snapshots(catalog: SnapshotCatalog) -> None:
-    """FULL compaction: rewrite each delta stage's CURRENT state as one
-    ``replaces_prior`` snapshot, truncating the read-side union (the
-    latest-wins / doc_id-dedup window otherwise grows with batch count —
-    merge-on-read cost must be bounded by state size, not history length;
-    Iceberg analog: a rewrite-data-files compaction commit). I/O is
-    O(state) — use :func:`compact_deltas` when the accumulated deltas are
-    small relative to the base (size-tiered policy in incremental_dedup).
-
-    Stages compact independently and each is committed by its manifest
-    append AFTER its parquet write, so a crash mid-compaction leaves every
-    stage readable (at worst an orphan data directory). The full manifest
-    history stays time-travelable via ``catalog.snapshots``.
-
-    Concurrency: compaction assumes a single writer per stage; the commit
-    carries the latest snapshot id observed at read time, so a delta batch
-    landing mid-compaction raises ``ConcurrentSnapshotError`` instead of
-    being silently truncated out of the active set."""
-    fmt = {"format": FORMAT_VERSION, "compaction": True}
-    expected = {s: _expected_latest(catalog, s) for s in (DOCS_STAGE, FEATURES_STAGE, CLUSTERS_STAGE)}
-    docs = catalog.read_stage_union(DOCS_STAGE).dropDuplicates(["doc_id"])
-    feats = catalog.read_stage_union(FEATURES_STAGE).dropDuplicates(["doc_id"])
-    clusters = read_clusters(catalog).withColumn(
-        "batch_seq", F.lit(len(catalog.snapshots(CLUSTERS_STAGE)))
-    )
-    catalog.write_stage(feats, FEATURES_STAGE, metrics=fmt, replaces_prior=True,
-                        expected_latest_id=expected[FEATURES_STAGE])
-    catalog.write_stage(clusters, CLUSTERS_STAGE, metrics=fmt, replaces_prior=True,
-                        expected_latest_id=expected[CLUSTERS_STAGE])
-    catalog.write_stage(docs, DOCS_STAGE, metrics=fmt, replaces_prior=True,
-                        expected_latest_id=expected[DOCS_STAGE])
-
-
-def compact_deltas(catalog: SnapshotCatalog) -> None:
-    """MINOR (size-tiered) compaction: merge ONLY the accumulated delta
-    snapshots into one snapshot per stage via ``replaces_ids``, leaving the
-    base ``replaces_prior`` snapshot untouched. I/O is proportional to the
-    DELTA volume, not the state — at 10^12 docs rewriting the full state
-    every N batches is a major job, but the deltas between compactions stay
-    small, so this bounds the merge-on-read width (base + 1 merged delta +
-    recents) at delta cost.
-
-    Correctness: CLUSTERS rows keep their original ``batch_seq`` after
-    latest-wins within the merged window, so the reader's latest-wins
-    against the base (older seqs) and future deltas (newer seqs) is
-    unchanged; DOCS/FEATURES merge by doc_id-dedup, same as the read path.
-    Same single-writer guard as full compaction."""
-    fmt = {"format": FORMAT_VERSION, "compaction": "minor"}
+    Each stage is committed by its manifest append AFTER its parquet write,
+    so a crash mid-compaction leaves every stage readable (at worst an
+    orphan data directory), and the full manifest history stays
+    time-travelable via ``catalog.snapshots``. Compaction assumes a single
+    writer per stage: the commit carries the latest snapshot id observed
+    before the stage's read, so a delta batch landing mid-compaction raises
+    ``ConcurrentSnapshotError`` instead of being silently truncated out of
+    the active set."""
+    fmt = {"format": FORMAT_VERSION, "compaction": True if full else "minor"}
     for stage in (FEATURES_STAGE, CLUSTERS_STAGE, DOCS_STAGE):
-        expected = _expected_latest(catalog, stage)
-        active = catalog.active_snapshots(stage)
-        deltas = [e for e in active if not e.get("replaces_prior")]
-        if len(deltas) < 2:
-            continue
-        union = catalog.read_entries(deltas)
+        latest = catalog.latest(stage)
+        entries = catalog.active_snapshots(stage)
+        if not full:
+            entries = [e for e in entries if not e.get("replaces_prior")]
+            if len(entries) < 2:
+                continue
+        union = catalog.read_entries(entries)
         if stage == CLUSTERS_STAGE:
             merged = _latest_per_doc(union)
         else:
@@ -175,9 +146,24 @@ def compact_deltas(catalog: SnapshotCatalog) -> None:
             merged,
             stage,
             metrics=fmt,
-            replaces_ids=[e["snapshot_id"] for e in deltas],
-            expected_latest_id=expected,
+            replaces_prior=full,
+            replaces_ids=None if full else [e["snapshot_id"] for e in entries],
+            expected_latest_id=latest["snapshot_id"] if latest else None,
         )
+
+
+def compact_snapshots(catalog: SnapshotCatalog) -> None:
+    """FULL compaction: rewrite each stage's CURRENT state as one
+    ``replaces_prior`` snapshot, truncating the read-side union (Iceberg
+    analog: a rewrite-data-files commit). I/O is O(state)."""
+    _compact(catalog, full=True)
+
+
+def compact_deltas(catalog: SnapshotCatalog) -> None:
+    """MINOR (size-tiered) compaction: merge only the deltas after each
+    stage's base into one ``replaces_ids`` snapshot, leaving the base
+    untouched. I/O is proportional to the delta volume, not the state."""
+    _compact(catalog, full=False)
 
 
 def incremental_dedup(
@@ -236,11 +222,12 @@ def incremental_dedup(
     scope = CacheScope()
     # feature reuse: hash ONLY the new docs run_dedup would hash. Persisted
     # on its own so the FEATURES snapshot write below reads the cache
-    # instead of running the Arrow UDF a second time
+    # instead of running the Arrow UDF a second time. No SimHash channel
+    # here, so the fingerprint column stays NULL (simhash=False)
     new_feats = scope.persist(
-        with_features(eligible_docs(truly_new, cfg).select("doc_id", "text"), cfg).select(
-            "doc_id", "shingles", "minhash", "simhash", "bands"
-        )
+        with_features(
+            eligible_docs(truly_new, cfg).select("doc_id", "text"), cfg, simhash=False
+        ).select("doc_id", "shingles", "minhash", "simhash", "bands")
     )
     feats = (
         new_feats if old_feats is None
@@ -268,7 +255,7 @@ def incremental_dedup(
         pick_winners(
             assign_clusters(
                 all_docs.withColumn("_text_len", F.length("text")),
-                edges.dropDuplicates(["src", "dst"]),
+                edges,
                 "doc_id",
             ),
             "_text_len",

@@ -207,6 +207,50 @@ def test_compaction_preserves_state_and_bounds_reads(spark, tmp_path):
     )
 
 
+def test_delta_after_full_compaction_wins(spark, tmp_path):
+    """A full compaction keeps each CLUSTERS row's batch_seq, and the next
+    delta is stamped len(snapshots(CLUSTERS)), larger than all of them: a
+    delta row for a doc_id the compacted snapshot holds must win on read."""
+    from product_deduplication_spark.streaming import incremental as inc
+
+    docs, _ = generate_web_documents(n_base_docs=30, seed=83)
+    half = len(docs) // 2
+    cat = SnapshotCatalog(spark, str(tmp_path / "inc_order"))
+    for b in (docs.iloc[:half], docs.iloc[half:]):
+        incremental_dedup(
+            spark, cat, spark.createDataFrame(b[["url", "text"]]), CFG, auto_compact=None
+        )
+    inc.compact_snapshots(cat)
+    compacted = cat.read_stage(inc.CLUSTERS_STAGE)
+    assert {r["batch_seq"] for r in compacted.select("batch_seq").distinct().collect()} == {0, 1}
+    row = compacted.where(F.col("batch_seq") == 0).orderBy("doc_id").first()
+    seq = len(cat.snapshots(inc.CLUSTERS_STAGE))
+    cat.write_stage(
+        spark.createDataFrame(
+            [(row["url"], row["doc_id"], -1, not row["is_winner"], seq)],
+            compacted.schema,
+        ),
+        inc.CLUSTERS_STAGE,
+    )
+    state = inc.read_clusters(cat)
+    assert state.count() == len(docs)
+    got = state.where(F.col("doc_id") == row["doc_id"]).collect()
+    assert [(r["cluster_id"], r["is_winner"]) for r in got] == [(-1, not row["is_winner"])]
+
+
+def test_incremental_features_hold_no_simhash(spark, tmp_path):
+    """The incremental path has no SimHash channel, so its FEATURES
+    snapshots carry a NULL fingerprint instead of hashing one per doc."""
+    from product_deduplication_spark.streaming import incremental as inc
+
+    docs, _ = generate_web_documents(n_base_docs=20, seed=89)
+    cat = SnapshotCatalog(spark, str(tmp_path / "inc_nosimhash"))
+    incremental_dedup(spark, cat, spark.createDataFrame(docs[["url", "text"]]), CFG)
+    feats = cat.read_stage_union(inc.FEATURES_STAGE)
+    assert feats.count() > 0
+    assert feats.where(F.col("simhash").isNotNull()).count() == 0
+
+
 def test_size_tiered_compaction_minor_merges_deltas_only(spark, tmp_path):
     """VERDICT r04 #6: once a base exists and the accumulated deltas are
     small relative to it, compaction must merge ONLY the deltas
@@ -268,7 +312,7 @@ def test_compaction_concurrent_writer_guard(spark, tmp_path):
     cat = SnapshotCatalog(spark, str(tmp_path / "inc_guard"))
     incremental_dedup(spark, cat, spark.createDataFrame(docs.iloc[:half][["url", "text"]]), CFG)
     # "compaction" reads state here...
-    stale = inc._expected_latest(cat, inc.CLUSTERS_STAGE)
+    stale = cat.latest(inc.CLUSTERS_STAGE)["snapshot_id"]
     state = inc.read_clusters(cat).withColumn("batch_seq", F.lit(99))
     # ...but another batch commits in between
     incremental_dedup(spark, cat, spark.createDataFrame(docs.iloc[half:][["url", "text"]]), CFG)

@@ -91,3 +91,26 @@ def test_every_doc_in_exactly_one_cluster(corpus, result):
     winners = result.clusters.where("is_winner").count()
     n_clusters = result.clusters.select("cluster_id").distinct().count()
     assert winners == n_clusters
+
+
+# Spark jobs started by run_dedup with SimHash on plus one count of its
+# clusters (the corpus below, local[8], 8 shuffle partitions): 39 in three
+# runs on a 4-CPU host. The bound leaves two jobs of slack for AQE's
+# runtime plan choices. A job costs ~0.1 s of scheduling there, whatever
+# its size, so a stage that adds jobs shows up here first.
+BATCH_JOBS = 41
+
+
+def test_batch_job_count(spark, count_jobs):
+    docs, _ = generate_web_documents(n_base_docs=40, seed=5)
+    frame = spark.createDataFrame(docs[["url", "text"]])
+
+    def run():
+        res = run_dedup(frame, CFG, use_simhash=True)
+        n = res.clusters.count()
+        res.release()
+        return n
+
+    n, jobs = count_jobs(run)
+    assert n == len(docs)
+    assert jobs <= BATCH_JOBS

@@ -1,16 +1,20 @@
-"""Verify-stage knobs: candidate cap (reference ntop=25), prefilter safety,
-title-case parity."""
+"""Verify stage: exact-Jaccard output against the brute-force oracle,
+prefilter safety, title-case parity."""
 
 from __future__ import annotations
 
+import random
+
 import numpy as np
 import pandas as pd
+import pytest
 
 from product_deduplication_spark.config import DedupConfig
 from product_deduplication_spark.functions import hashing
 from product_deduplication_spark.functions.features import with_features
 from product_deduplication_spark.functions.normalize import title_case
-from product_deduplication_spark.operators.verify import N_MIN, verify_pairs
+from product_deduplication_spark.operators.verify import MARGIN, N_MIN, verify_pairs
+from product_deduplication_spark.oracle.brute_force import exact_jaccard_pairs, shingle_sets
 
 
 def _feats_and_pairs(spark, texts, cfg):
@@ -25,42 +29,31 @@ def _feats_and_pairs(spark, texts, cfg):
     return feats, pairs
 
 
-def test_candidate_cap_per_doc(spark):
-    """O2: rank-cap keeps only the top-k strongest matches per src
-    (reference/static.py:194 ntop semantics)."""
-    base = "the quick brown fox jumps over the lazy dog and runs far away " * 4
-    texts = [base] + [base + f" tail{i}" for i in range(6)]
-    cfg = DedupConfig(shuffle_partitions=4, jaccard_threshold=0.5, prefilter_margin=None)
-    feats, pairs = _feats_and_pairs(spark, texts, cfg)
-    uncapped = verify_pairs(pairs, feats, cfg)
-    n_for_src0 = uncapped.where("src = 0").count()
-    assert n_for_src0 == 6
-    capped = verify_pairs(pairs, feats, cfg.with_(candidate_cap_per_doc=3))
-    assert capped.where("src = 0").count() == 3
-    # the kept 3 follow the operator's deterministic order: sim desc, dst asc
-    top = {r["dst"] for r in capped.where("src = 0").collect()}
-    ranked = sorted(
-        uncapped.where("src = 0").collect(), key=lambda r: (-r["similarity"], r["dst"])
-    )
-    assert top == {r["dst"] for r in ranked[:3]}
-
-
-def test_prefilter_never_drops_threshold_pairs(spark):
-    """Prefilter on vs off must yield identical verified edges (the margin
-    is at least 6 sigma where the filter applies — this is the practical
-    check of that claim)."""
-    rng_texts = [
-        ("hello world this is a long document about spark and data " * 3) + f"v{i}"
-        for i in range(10)
+def test_verify_matches_brute_force_oracle(spark):
+    """verify_pairs keeps exactly the pairs the brute-force oracle finds at
+    the threshold, with the same similarities, over every pair of: long
+    docs (over ``N_MIN`` shingles, so the estimate filters them), their
+    near-copies and a half-and-half splice, plus two short near-copies below
+    ``N_MIN`` (exact Jaccard 0.8, no estimate)."""
+    rng = random.Random(3)
+    vocab = [f"w{k}" for k in range(400)]
+    words = [[rng.choice(vocab) for _ in range(60)] for _ in range(6)]
+    texts = [" ".join(w) for w in words] + [
+        " ".join(words[0][:-2]),
+        " ".join(words[1] + ["tail"]),
+        " ".join(words[2][:30] + words[3][30:]),
+        "tiny page a b",
+        "tiny page a c",
     ]
-    near = [rng_texts[0] + " extra", rng_texts[0] + " other extra"]
-    cfg_on = DedupConfig(shuffle_partitions=4, jaccard_threshold=0.7)
-    cfg_off = cfg_on.with_(prefilter_margin=None)
-    feats, pairs = _feats_and_pairs(spark, rng_texts + near, cfg_on)
-    on = {(r["src"], r["dst"]) for r in verify_pairs(pairs, feats, cfg_on).collect()}
-    off = {(r["src"], r["dst"]) for r in verify_pairs(pairs, feats, cfg_off).collect()}
-    assert on == off
-    assert on  # some near pairs exist
+    cfg = DedupConfig(shuffle_partitions=4)
+    sizes = [s.size for s in shingle_sets(texts, cfg)]
+    assert min(sizes[:9]) >= N_MIN > max(sizes[9:])
+    feats, pairs = _feats_and_pairs(spark, texts, cfg)
+    got = {(r["src"], r["dst"]): r["similarity"] for r in verify_pairs(pairs, feats, cfg).collect()}
+    want = exact_jaccard_pairs(list(range(len(texts))), texts, cfg)
+    assert set(got) == set(zip(want["src"], want["dst"])) == {(0, 6), (1, 7), (9, 10)}
+    for a, b, sim in want.itertuples(index=False):
+        assert got[(a, b)] == pytest.approx(sim)
 
 
 def test_prefilter_keeps_short_near_copies(spark):
@@ -79,7 +72,7 @@ def test_prefilter_keeps_short_near_copies(spark):
     sigs = list(hashing.oph_signatures(sets, hashing.minhash_seeds(cfg.num_hashes, cfg.seed)))
     # the estimate verify computes, on 31-bit truncated signatures
     est = [np.mean((a & 0x7FFFFFFF) == (b & 0x7FFFFFFF)) for a, b in zip(sigs[::2], sigs[1::2])]
-    assert min(est) < cfg.jaccard_threshold - cfg.prefilter_margin
+    assert min(est) < cfg.jaccard_threshold - MARGIN
 
     small, big = np.arange(20, dtype=np.uint32), np.arange(N_MIN, dtype=np.uint32)
     sets += [small, small, big, big]
