@@ -38,11 +38,6 @@ class DedupConfig:
     # estimate is property-tested for sets of at least num_hashes shingles
     jaccard_threshold: float = 0.8  # exact-Jaccard verify threshold
 
-    # --- SimHash ---------------------------------------------------------
-    # pigeonhole chunks of the 64-bit fingerprint -> detects hamming <= chunks-1
-    simhash_chunks: int = 4
-    simhash_hamming_max: int = 3
-
     # --- skew / scale controls (SURVEY.md §4.1) -------------------------
     # Buckets with <= bucket_cap members enumerate all pairs; larger buckets
     # (boilerplate pages whose band hash collides for millions of docs) are
@@ -51,9 +46,7 @@ class DedupConfig:
     shuffle_partitions: int = 32
 
     # --- misc ------------------------------------------------------------
-    seed: int = 42
     min_doc_chars: int = 1      # docs shorter than this skip near-dup stages
-    substring_min_len: int = 50 # min length for exact-substring dedup match
 
     def __post_init__(self) -> None:
         # fail at construction, not deep inside a pipeline stage: every LSH
@@ -85,3 +78,5 @@ class DedupConfig:
 # The grocery-parity LSH config (char-3 shingles, 42x3 banding) lives in
 # parity.PARITY_CONFIG next to the pipeline that uses it; the verify
 # prefilter's margin is verify.MARGIN, next to the sd it was measured from.
+# Constants no caller varies sit next to their consumer: simhash_join.CHUNKS
+# and HAMMING_MAX, features.SEED and substring.MIN_LEN.

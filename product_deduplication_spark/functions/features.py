@@ -21,6 +21,8 @@ from product_deduplication_spark.config import DedupConfig
 from product_deduplication_spark.functions import hashing
 
 _TAG_RE = re.compile(r"<[^>]+>")
+# seed of the MinHash permutation parameters (hashing.minhash_seeds)
+SEED = 42
 
 FEATURE_SCHEMA = T.StructType(
     [
@@ -68,7 +70,7 @@ def make_feature_udf(cfg: DedupConfig, simhash: bool = True):
     (batched numpy, ``hashing.oph_signatures``).
     simhash: 64-bit TF-weighted fingerprint.
     """
-    seeds = hashing.minhash_seeds(cfg.num_hashes, cfg.seed)
+    seeds = hashing.minhash_seeds(cfg.num_hashes, SEED)
     k = cfg.shingle_k
     mode = cfg.shingle_mode
     n_bands = cfg.lsh_bands

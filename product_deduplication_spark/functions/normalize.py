@@ -19,6 +19,8 @@ SURVEY.md P3-P10) and its fuzzy verification (``reference/static.py:203-215,
 - ``token_sort_ratio``: pure-python Levenshtein ratio on sorted-token
   strings (fuzzywuzzy is not installed; this is the same formula
   round(100 * (1 - dist/lensum)) fuzzywuzzy uses)
+- ``fuzzy_name_match``: the V4 + V5 predicate over a pair relation, shared
+  by the grocery parity pipeline and barcode linkage
 """
 
 from __future__ import annotations
@@ -356,3 +358,20 @@ def make_token_sort_ratio_udf():
         return pd.Series([token_sort_ratio(x, y) for x, y in zip(a, b)], dtype="int32")
 
     return ratio
+
+
+def fuzzy_name_match(
+    pairs: DataFrame, a: str, b: str, threshold_products: int, threshold_package: int
+) -> DataFrame:
+    """Rows of ``pairs`` passing the reference's V4 + V5 predicate
+    (``static.py:203-215,236-260``): ``fuzz_ratio`` (token_sort_ratio of
+    names ``a`` and ``b``) >= ``threshold_products`` and ``package_ratio``
+    (of their extracted packages) > ``threshold_package``."""
+    ratio = make_token_sort_ratio_udf()
+    pkg = make_package_extract_udf()
+    return (
+        pairs.withColumn("fuzz_ratio", ratio(F.col(a), F.col(b)))
+        .where(F.col("fuzz_ratio") >= threshold_products)
+        .withColumn("package_ratio", ratio(pkg(F.col(a)), pkg(F.col(b))))
+        .where(F.col("package_ratio") > threshold_package)
+    )

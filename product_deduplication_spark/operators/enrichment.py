@@ -16,6 +16,9 @@ Semantics preserved (file:line per step in the function bodies):
 - bulk rows: type backfilled by identifier length < 7 (``:148-149``),
   Override = Yes on the first row per product (``:160-164`` — the shift(1)
   idiom becomes a row_number window)
+- images: :func:`agg_images_bulk_reference_shape` copies every slot of ONE
+  chosen loser onto the winner, the reference's exact row shape, from the
+  unpivoted slots of :func:`_images_long` (``agg_images.py:27-146``)
 """
 
 from __future__ import annotations
@@ -196,9 +199,8 @@ def agg_images_bulk_reference_shape(
     catalog_uuid: str = "catalog-0",
 ) -> DataFrame:
     """The reference's EXACT agg_images row shape: copy EVERY image slot of
-    ONE chosen loser onto the winner (``reference/agg_images.py:60-146``) —
-    vs :func:`propagate_images`, which picks the single best image
-    (documented deviation). Semantics reproduced bug-for-bug:
+    ONE chosen loser onto the winner (``reference/agg_images.py:60-146``).
+    Semantics reproduced bug-for-bug:
 
     - eligible winners: 3P-image count != 1 (``:47-48`` — a winner with TWO
       3P images stays 'updatable', faithfully reproduced)
@@ -267,60 +269,4 @@ def agg_images_bulk_reference_shape(
         F.col("image_source").alias("ImageSource"),
         F.lit(None).cast("string").alias("CatalogImageSource"),
         F.when(F.row_number().over(w) == 1, "Yes").otherwise("No").alias("Override"),
-    )
-
-
-def propagate_images(relations: DataFrame, images_wide: DataFrame, n_slots: int = 3) -> DataFrame:
-    """Pick the best image per winner from winner+loser image slots.
-
-    ``reference/agg_images.py``: wide image_1..n / image_source_1..n →
-    unpivot (``:27-37``), '\\N' sentinel → null (``:36,76``), third-party-
-    approved sources win (``:40,80-81``).
-
-    The reference runs a three-way case analysis (winner already 3P → no
-    update; loser has 3P → '3p from loser', ``:94-98``; winner imageless and
-    loser has any image → 'Adds image', ``:101-105``). A single rank window
-    ordered (is_3p_approved desc, winner-side first, slot asc) selects the
-    same final image in every case: winner-3P beats loser images; loser-3P
-    beats winner-non-3P; winner-non-3P beats loser-non-3P (= no update);
-    loser image fills an imageless winner. Output: one best
-    (winner_entity_uuid, image_url, image_source) per winner — the
-    reference instead copies all slots of ONE arbitrarily-chosen loser
-    (``:115-116``); the winning image is identical, the row shape is not.
-    """
-    rel = _dedup_relations(relations)
-    long_rows = images_wide.select(
-        F.col("ucpc_entity_uuid").alias("entity_uuid"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.struct(
-                        F.col(f"image_{i}").alias("image_url"),
-                        F.col(f"image_source_{i}").alias("image_source"),
-                    )
-                    for i in range(1, n_slots + 1)
-                ]
-            )
-        ).alias("slot", "img"),
-    ).select("entity_uuid", "slot", F.col("img.image_url"), F.col("img.image_source"))
-    long_rows = long_rows.replace("\\N", None, subset=["image_url", "image_source"]).where(
-        F.col("image_url").isNotNull()
-    )
-    long_rows = long_rows.withColumn(
-        "is_3p_approved",
-        (F.col("image_source") == "IMAGE_SOURCE_THIRD_PARTY_APPROVED").cast("int"),
-    )
-    members = rel.select(
-        F.col("winner_entity_uuid"), F.col("winner_entity_uuid").alias("entity_uuid"), F.lit(0).alias("side")
-    ).unionByName(
-        rel.select(F.col("winner_entity_uuid"), F.col("loser_entity_uuid").alias("entity_uuid"), F.lit(1).alias("side"))
-    )
-    cands = members.join(long_rows, "entity_uuid")
-    w = Window.partitionBy("winner_entity_uuid").orderBy(
-        F.desc("is_3p_approved"), F.asc("side"), F.asc("slot"), F.asc("image_url")
-    )
-    return (
-        cands.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("winner_entity_uuid", "image_url", "image_source")
     )

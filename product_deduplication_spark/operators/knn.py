@@ -3,8 +3,9 @@
 Training-data-pipeline op (embedding-cosine near-dup / retrieval):
 
 - ``brute_force_topk``: exact cosine top-k via JVM higher-order functions
-  (zip_with dot product) — the baseline; O(|Q| x |C|), fine when the query
-  side is small or broadcastable.
+  (zip_with dot product, norms computed once per vector) — the baseline and
+  the registry's ``knn_cosine`` row; O(|Q| x |C|), fine when the query side
+  is small or broadcastable.
 - ``ann_topk``: random-hyperplane LSH (sign bits → bucket key; Charikar
   SimHash for real vectors). Candidates = vectors sharing a bucket in any of
   ``n_tables`` hash tables; exact cosine re-rank on candidates only. The
@@ -21,7 +22,9 @@ Training-data-pipeline op (embedding-cosine near-dup / retrieval):
   dedup connectivity; top-k instead keeps a bounded deterministic sample to
   re-rank, trading recall only inside pathologically-hot buckets).
 
-Both return (query_id, neighbor_id, cos, rk) with deterministic tie-breaks.
+Both return (query_id, neighbor_id, cos, rk) with deterministic tie-breaks;
+``ann_topk`` re-ranks through ``_cos_expr``, which the ``ann_topk`` registry
+row also uses as its independent exact recheck.
 """
 
 from __future__ import annotations
@@ -33,12 +36,16 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
 
+def _dot(a, b):
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _norm(c):
+    return F.sqrt(F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
+
+
 def _cos_expr(a: str, b: str):
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
-    )
-    return dot / (norm(F.col(a)) * norm(F.col(b)))
+    return _dot(a, b) / (_norm(F.col(a)) * _norm(F.col(b)))
 
 
 def _as_double(col):
@@ -48,18 +55,20 @@ def _as_double(col):
 def brute_force_topk(
     queries: DataFrame, corpus: DataFrame, k: int = 5, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
+    # one norm per vector, before the theta join: the dot product is the only
+    # per-pair O(d) work, and the doubles equal _cos_expr's
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
+    ).withColumn("qn", _norm(F.col("qv")))
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-    )
+    ).withColumn("cn", _norm(F.col("cv")))
     pairs = q.join(c, F.col("query_id") != F.col("neighbor_id")).withColumn(
-        "cos", F.round(_cos_expr("qv", "cv"), 6)
+        "cos", F.round(_dot("qv", "cv") / (F.col("qn") * F.col("cn")), 6)
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
-        pairs.withColumn("rk", F.row_number().over(w))
+        pairs.withColumn("rk", F.row_number().over(w).cast("long"))
         .where(F.col("rk") <= k)
         .select("query_id", "neighbor_id", "cos", "rk")
     )

@@ -29,11 +29,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from product_deduplication_spark.config import DedupConfig
 from product_deduplication_spark.functions.features import with_features
-from product_deduplication_spark.functions.normalize import (
-    make_package_extract_udf,
-    make_token_sort_ratio_udf,
-    normalize_names,
-)
+from product_deduplication_spark.functions.normalize import fuzzy_name_match, normalize_names
 from product_deduplication_spark.operators.lsh import candidate_pairs
 from product_deduplication_spark.parity import PARITY_CONFIG
 
@@ -101,14 +97,7 @@ def match_barcodes_to_canonical(
     )
     p = p.select("canon_name", "ean_name").unionByName(identical).dropDuplicates()
 
-    ratio = make_token_sort_ratio_udf()
-    pkg = make_package_extract_udf()
-    p = p.withColumn("fuzz_ratio", ratio(F.col("canon_name"), F.col("ean_name"))).where(
-        F.col("fuzz_ratio") >= threshold_products
-    )
-    p = p.withColumn(
-        "package_ratio", ratio(pkg(F.col("canon_name")), pkg(F.col("ean_name")))
-    ).where(F.col("package_ratio") > threshold_package)
+    p = fuzzy_name_match(p, "canon_name", "ean_name", threshold_products, threshold_package)
 
     # 4. one best match per canonical product (match_barcode.py:117-121)
     w = Window.partitionBy("canon_name").orderBy(

@@ -1,24 +1,20 @@
 """Multimodal column plumbing: image/audio/video as opaque binary + metadata.
 
-Training-data-pipeline ops over binary payload columns. Decode backends:
+Training-data-pipeline ops over binary payload columns. One decoder,
+``MediaCodecBackend``, routes each payload by its magic bytes:
 
-- ``PngDecodeBackend`` — a REAL image decoder for PNG payloads built on
-  nothing but stdlib ``zlib`` + the PNG filter spec (no codec libraries
-  exist in this container): chunk parse → inflate → per-scanline unfilter
-  (all five filter types) → pixel array → mean-pooled grayscale feature,
-  ``feature_kind="png-stdlib"``.
-- ``WavDecodeBackend`` — a REAL audio decoder for RIFF/WAVE PCM payloads
-  built on stdlib ``wave`` (8/16/24/32-bit widths, any channel count
-  downmixed to mono) → RMS loudness envelope pooled to ``dim`` windows,
-  ``feature_kind="wav-stdlib"``.
-- ``MediaCodecBackend`` — routes each payload by magic bytes to the PNG or
-  WAV kernel; anything else stubs (or raises in strict mode). The shape a
-  production backend takes when PIL/pyav land: add a codec, keep the row
-  contract.
-- ``DecodeBackend`` (base) — for codecs that genuinely need external
-  libraries (JPEG/compressed audio/video): raises ``NotImplementedError``
-  in strict mode, or produces a deterministic sha-seeded fake labeled
-  ``feature_kind="stub"`` so it can never be mistaken for a real embedding.
+- PNG → a REAL image decoder built on nothing but stdlib ``zlib`` + the PNG
+  filter spec (no codec library dependency): chunk parse →
+  inflate → per-scanline unfilter (all five filter types) → pixel array →
+  mean-pooled grayscale feature, ``feature_kind="png-stdlib"``.
+- RIFF/WAVE PCM → a REAL audio decoder built on stdlib ``wave`` (8/16/24/
+  32-bit widths, any channel count downmixed to mono) → RMS loudness
+  envelope pooled to ``dim`` windows, ``feature_kind="wav-stdlib"``.
+- anything else (JPEG, compressed audio/video: codecs that need external
+  libraries) → a deterministic sha-seeded fake labeled
+  ``feature_kind="stub"`` so it can never be mistaken for a real embedding,
+  or ``NotImplementedError`` in strict mode. A corrupt payload behind a
+  recognized magic stubs too, or raises its ``ValueError`` in strict mode.
 
 Everything Spark-side is real and tested either way: schemas, Arrow batch
 shapes, ``mapInPandas`` streaming (binary payloads never accumulate on the
@@ -77,51 +73,9 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-class DecodeBackend:
-    """Pluggable decode kernel. The real implementation would wrap PIL /
-    torchaudio / pyav; neither is installed here, so:
-
-    - ``strict=True``  → raise NotImplementedError (production default until
-      a codec backend is wired in)
-    - ``strict=False`` → deterministic fake feature: a unit-norm float
-      vector seeded by sha256(payload) — stable across processes, good
-      enough to exercise the whole distributed path end-to-end.
-    """
-
-    def __init__(self, dim: int = 16, strict: bool = False):
-        self.dim = dim
-        self.strict = strict
-
-    @property
-    def feature_kind(self) -> str:
-        """Provenance label stamped on every output row. The base class's
-        non-strict path emits deterministic fakes — labeled ``"stub"`` so
-        they can never be mistaken for real embeddings; a real backend
-        subclass overrides this with its codec/model name."""
-        return "stub"
-
-    def decode_features(self, payload: bytes | None) -> np.ndarray | None:
-        if payload is None:
-            return None
-        if self.strict:
-            raise NotImplementedError(
-                "media decode requires a codec backend (PIL/pyav) not present "
-                "in this environment; run with strict=False for the "
-                "deterministic stub"
-            )
-        return _stub_feature(payload, self.dim)
-
-    def decode_with_kind(self, payload: bytes | None) -> tuple[np.ndarray | None, str | None]:
-        """(feature, provenance) — backends that handle several payload
-        classes (real codec vs stub fallback) override this so each ROW is
-        labeled by how it was actually decoded."""
-        v = self.decode_features(payload)
-        return v, (None if v is None else self.feature_kind)
-
-
 def _stub_feature(payload: bytes, dim: int) -> np.ndarray:
     """Deterministic sha-seeded unit-norm fake — the labeled fallback for
-    payloads no real kernel decodes (see DecodeBackend docstring)."""
+    payloads no real kernel decodes (module docstring)."""
     digest = hashlib.sha256(payload).digest()
     seed = int.from_bytes(digest[:8], "big")
     rng = np.random.default_rng(seed)
@@ -252,43 +206,6 @@ def png_grid_feature(px: np.ndarray, dim: int = 16) -> np.ndarray:
     return v / norm
 
 
-class PngDecodeBackend(DecodeBackend):
-    """Real PNG decode via stdlib zlib + the filter spec (module docstring).
-
-    PNG payloads produce genuine pixel-statistics features
-    (``feature_kind="png-stdlib"``); non-PNG payloads fall back to the
-    deterministic stub (``"stub"``) or, in strict mode, raise — so a mixed
-    media table is decodable end-to-end with per-row provenance."""
-
-    @property
-    def feature_kind(self) -> str:
-        return "png-stdlib"
-
-    def decode_with_kind(self, payload: bytes | None) -> tuple[np.ndarray | None, str | None]:
-        if payload is None:
-            return None, None
-        if payload.startswith(PNG_MAGIC):
-            try:
-                return png_grid_feature(decode_png(payload), self.dim), self.feature_kind
-            except ValueError:
-                # corrupt/unsupported PNG: at corpus scale one bad blob must
-                # not fail the stage — degrade to the labeled stub (strict
-                # mode re-raises so pipelines that demand real decode fail
-                # loudly)
-                if self.strict:
-                    raise
-                return _stub_feature(payload, self.dim), "stub"
-        if self.strict:
-            raise NotImplementedError(
-                "non-PNG media payload in strict mode: JPEG/audio/video decode "
-                "requires codec libraries not present in this environment"
-            )
-        return _stub_feature(payload, self.dim), "stub"
-
-    def decode_features(self, payload: bytes | None) -> np.ndarray | None:
-        return self.decode_with_kind(payload)[0]
-
-
 def _is_wav(data: bytes) -> bool:
     return len(data) >= 12 and data[:4] == b"RIFF" and data[8:12] == b"WAVE"
 
@@ -352,57 +269,24 @@ def wav_envelope_feature(x: np.ndarray, dim: int = 16) -> np.ndarray:
     return v / norm
 
 
-class WavDecodeBackend(DecodeBackend):
-    """Real RIFF/WAVE PCM decode via stdlib ``wave`` (module docstring).
-
-    WAV payloads produce genuine loudness-envelope features
-    (``feature_kind="wav-stdlib"``); non-WAV payloads fall back to the
-    deterministic stub (``"stub"``) or, in strict mode, raise."""
-
-    @property
-    def feature_kind(self) -> str:
-        return "wav-stdlib"
-
-    def decode_with_kind(self, payload: bytes | None) -> tuple[np.ndarray | None, str | None]:
-        if payload is None:
-            return None, None
-        if _is_wav(payload):
-            try:
-                samples, _fr = decode_wav(payload)
-                return wav_envelope_feature(samples, self.dim), self.feature_kind
-            except ValueError:
-                # corrupt/non-PCM WAVE: degrade to the labeled stub rather
-                # than failing the stage (strict mode re-raises)
-                if self.strict:
-                    raise
-                return _stub_feature(payload, self.dim), "stub"
-        if self.strict:
-            raise NotImplementedError(
-                "non-WAV media payload in strict mode: compressed audio/video "
-                "decode requires codec libraries not present in this environment"
-            )
-        return _stub_feature(payload, self.dim), "stub"
-
-    def decode_features(self, payload: bytes | None) -> np.ndarray | None:
-        return self.decode_with_kind(payload)[0]
-
-
-class MediaCodecBackend(DecodeBackend):
+class MediaCodecBackend:
     """Magic-byte router over the real codec kernels: PNG → pooled-grid
     image feature, RIFF/WAVE PCM → loudness-envelope audio feature,
     anything else → deterministic stub (strict mode: raise). Every row is
     labeled by how it was ACTUALLY decoded, so a mixed media table keeps
-    per-row provenance."""
+    per-row provenance. A production backend adds codecs (PIL, pyav) here
+    and keeps the row contract."""
 
-    def decode_with_kind(self, payload: bytes | None) -> tuple[np.ndarray | None, str | None]:
-        if payload is None:
-            return None, None
+    def __init__(self, dim: int = 16, strict: bool = False):
+        self.dim = dim
+        self.strict = strict
+
+    def decode_with_kind(self, payload: bytes) -> tuple[np.ndarray, str]:
         try:
             if payload.startswith(PNG_MAGIC):
                 return png_grid_feature(decode_png(payload), self.dim), "png-stdlib"
             if _is_wav(payload):
-                samples, _fr = decode_wav(payload)
-                return wav_envelope_feature(samples, self.dim), "wav-stdlib"
+                return wav_envelope_feature(decode_wav(payload)[0], self.dim), "wav-stdlib"
         except ValueError:
             # corrupt/unsupported payload behind a recognized magic: degrade
             # to the labeled stub at corpus scale (strict mode re-raises)
@@ -417,21 +301,17 @@ class MediaCodecBackend(DecodeBackend):
             )
         return _stub_feature(payload, self.dim), "stub"
 
-    def decode_features(self, payload: bytes | None) -> np.ndarray | None:
-        return self.decode_with_kind(payload)[0]
-
 
 def extract_media_features(
-    media: DataFrame, backend: DecodeBackend | None = None, batch_budget_bytes: int = 64 << 20
+    media: DataFrame, backend: MediaCodecBackend | None = None
 ) -> DataFrame:
     """mapInPandas over binary payloads → per-item features + content hash.
 
     Scale notes: ``mapInPandas`` streams Arrow batches, so a partition of
-    large blobs never materializes fully in one Python list; repartitioning
-    should target ``batch_budget_bytes`` per partition upstream (use
-    ``repartition_by_bytes``).
+    large blobs never materializes fully in one Python list; size the
+    partitions upstream with ``repartition_by_bytes``.
     """
-    backend = backend or DecodeBackend()
+    backend = backend or MediaCodecBackend()
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -446,7 +326,7 @@ def extract_media_features(
                 hashes.append(hashlib.sha256(payload).hexdigest())
                 sizes.append(len(payload))
                 v, kind = backend.decode_with_kind(payload)
-                feats.append(None if v is None else v.tolist())
+                feats.append(v.tolist())
                 kinds.append(kind)
             yield pd.DataFrame(
                 {

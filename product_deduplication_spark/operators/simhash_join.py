@@ -8,7 +8,8 @@ candidates. By the pigeonhole principle, splitting the fingerprint into
 ``chunks`` equi-joins (one per chunk index), entirely JVM-side, followed by
 an exact popcount filter (``bit_count``, whole-stage codegen).
 
-Default 4 chunks of 16 bits → guaranteed recall for Hamming <= 3.
+``CHUNKS = 4`` chunks of 16 bits → guaranteed recall for Hamming <=
+``HAMMING_MAX = 3``.
 
 Skew: identical fingerprints (exact dups / boilerplate) would make a chunk
 key hot; the same hub-star trick as LSH applies — docs whose FULL simhash is
@@ -21,18 +22,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from product_deduplication_spark.config import DedupConfig
+# pigeonhole chunks of the 64-bit fingerprint; the recall guarantee holds
+# only while HAMMING_MAX < CHUNKS
+CHUNKS = 4
+HAMMING_MAX = 3
 
 
 def _chunk(col, i: int, width: int):
     return F.shiftrightunsigned(col, i * width).bitwiseAND(F.lit((1 << width) - 1))
 
 
-def simhash_candidate_pairs(
-    features: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
-) -> DataFrame:
-    """(src, dst) candidate pairs with Hamming(simhash) <= cfg.simhash_hamming_max."""
-    width = 64 // cfg.simhash_chunks  # the fingerprint is a 64-bit long
+def simhash_candidate_pairs(features: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(src, dst) candidate pairs with Hamming(simhash) <= HAMMING_MAX."""
+    width = 64 // CHUNKS  # the fingerprint is a 64-bit long
     # guard: features built with simhash=False carry NULL fingerprints —
     # banding them would be garbage-in (and a constant sentinel would
     # collide every doc into one bucket). Fail loudly, per row, JVM-side.
@@ -78,7 +80,7 @@ def simhash_candidate_pairs(
             F.array(
                 *[
                     (F.lit(i << width) + _chunk(F.col("simhash"), i, width)).alias(f"_c{i}")
-                    for i in range(cfg.simhash_chunks)
+                    for i in range(CHUNKS)
                 ]
             )
         ).alias("ckey"),
@@ -90,7 +92,7 @@ def simhash_candidate_pairs(
         .where(F.col("src") < F.col("dst"))
         .where(
             F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-            <= F.lit(cfg.simhash_hamming_max)
+            <= F.lit(HAMMING_MAX)
         )
         .select("src", "dst")
         .dropDuplicates(["src", "dst"])

@@ -37,6 +37,10 @@ from pyspark.sql.pandas.functions import pandas_udf
 from product_deduplication_spark.config import DedupConfig
 from product_deduplication_spark.functions.hashing import _FNV_PRIME, _U64_MAX, splitmix64
 
+# minimum length of a shared run the fingerprints must detect: winnowing
+# with k = 20 and w = MIN_LEN - k + 1 finds every run of >= MIN_LEN bytes
+MIN_LEN = 50
+
 
 def winnow_fingerprints(text: str, k: int = 20, w: int = 31) -> np.ndarray:
     """Distinct winnowing fingerprint hashes of ``text`` (UTF-8 bytes).
@@ -76,7 +80,7 @@ def substring_candidate_pairs(
 ) -> DataFrame:
     """(big, small) candidate pairs where `small`'s fingerprints are mostly
     contained in `big`'s. Columns: big, small, shared, small_total, frac."""
-    k, w = 20, cfg.substring_min_len - 20 + 1
+    k, w = 20, MIN_LEN - 20 + 1
     fp_udf = make_fingerprint_udf(k, max(w, 2))
     feats = docs.select(
         F.col(id_col).alias("node"),
@@ -128,7 +132,7 @@ def substring_hot_stats(
     EVERY fingerprint above bucket_cap — they cannot be matched by the
     candidate join and must be counted/logged by the caller (the pipeline's
     metrics snapshot), not dropped silently."""
-    k, w = 20, cfg.substring_min_len - 20 + 1
+    k, w = 20, MIN_LEN - 20 + 1
     fp_udf = make_fingerprint_udf(k, max(w, 2))
     feats = docs.select(
         F.col(id_col).alias("node"), fp_udf(F.col(text_col)).alias("fps")

@@ -16,11 +16,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from product_deduplication_spark.config import DedupConfig
 from product_deduplication_spark.functions.features import with_features
-from product_deduplication_spark.functions.normalize import (
-    make_package_extract_udf,
-    make_token_sort_ratio_udf,
-    normalize_names,
-)
+from product_deduplication_spark.functions.normalize import fuzzy_name_match, normalize_names
 from product_deduplication_spark.operators.connected_components import assign_clusters
 from product_deduplication_spark.operators.lsh import candidate_pairs
 
@@ -72,13 +68,6 @@ def grocery_dedup(
         pairs.join(nm.withColumnRenamed("doc_id", "src").withColumnRenamed("product_name", "name_a"), "src")
         .join(nm.withColumnRenamed("doc_id", "dst").withColumnRenamed("product_name", "name_b"), "dst")
     )
-    ratio = make_token_sort_ratio_udf()
-    pkg = make_package_extract_udf()
-    p = p.withColumn("fuzz_ratio", ratio(F.col("name_a"), F.col("name_b"))).where(
-        F.col("fuzz_ratio") >= threshold_products
-    )
-    p = p.withColumn("package_ratio", ratio(pkg(F.col("name_a")), pkg(F.col("name_b")))).where(
-        F.col("package_ratio") > threshold_package
-    )
+    p = fuzzy_name_match(p, "name_a", "name_b", threshold_products, threshold_package)
     clusters = assign_clusters(names, p.select("src", "dst"), "doc_id")
     return clusters.select("product_name", "cluster_id")

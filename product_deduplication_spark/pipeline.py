@@ -66,9 +66,14 @@ def prepare_docs(df: DataFrame, cfg: DedupConfig, validate_extraction: bool = Fa
     """Stage s1: doc ids + optional byte-identical extraction check.
 
     ``doc_id = xxhash64(url)`` gives long node ids for all downstream joins
-    (cf. integer encoding rationale, reference/static.py:267-271).
+    (cf. integer encoding rationale, reference/static.py:267-271). Every doc
+    carries a ``warc_ts`` (a NULL timestamp when the input has none), so
+    ``pick_winners`` orders by it at every entry point and snapshots of
+    batches with and without the column share one schema.
     """
     out = df.withColumn("doc_id", F.xxhash64("url"))
+    if "warc_ts" not in df.columns:
+        out = out.withColumn("warc_ts", F.lit(None).cast("timestamp"))
     if validate_extraction and "html" in df.columns:
         extract = make_extract_text_udf()
         out = out.withColumn("_extracted", extract(F.col("html")))
@@ -185,9 +190,7 @@ def run_dedup(
     def candidates() -> DataFrame:
         pairs = candidate_pairs(feats, cfg, scope=scope)
         if use_simhash:
-            pairs = pairs.unionByName(simhash_candidate_pairs(feats, cfg)).dropDuplicates(
-                ["src", "dst"]
-            )
+            pairs = pairs.unionByName(simhash_candidate_pairs(feats)).dropDuplicates(["src", "dst"])
         return pairs
 
     pairs = checkpoint("s4_candidates", candidates)

@@ -525,36 +525,10 @@ def q_token_jaccard_lsh(spark, sf):
 def q_knn_cosine(spark, sf):
     """Brute-force cosine top-k similarity search over embeddings
     (training-data op; baseline ANN path). Query set: vec_id < 10."""
-    e = _t(spark, sf, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    dot = F.aggregate(
-        F.zip_with("qv", "v", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
-    )
-    # norms hoisted to each side BEFORE the theta join: the same expressions
-    # evaluated once per vector instead of once per (query, vector) pair cut
-    # the per-pair O(d) work to the dot product alone (identical doubles —
-    # same aggregate over the same array, only evaluated earlier)
-    q = e.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        norm(F.col("v")).alias("qn"),
-    )
-    en = e.withColumn("en", norm(F.col("v")))
-    pairs = (
-        q.join(en, F.col("query_id") != F.col("vec_id"))
-        .withColumn("cos", F.round(dot / (F.col("qn") * F.col("en")), 6))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cos")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 5)
-        .select("query_id", "neighbor_id", "cos", F.col("rk").cast("long").alias("rk"))
-    )
+    from product_deduplication_spark.operators.knn import brute_force_topk
+
+    e = _t(spark, sf, "embeddings")
+    return brute_force_topk(e.where(F.col("vec_id") < 10), e, k=5)
 
 
 # --------------------------------------------------------------------------
@@ -652,7 +626,10 @@ def q_simhash_candidates(spark, sf):
       missing_star_edges  non-representative docs without their hub edge
       complete_ok         all of the above hold"""
     from product_deduplication_spark.functions.features import with_features
-    from product_deduplication_spark.operators.simhash_join import simhash_candidate_pairs
+    from product_deduplication_spark.operators.simhash_join import (
+        HAMMING_MAX,
+        simhash_candidate_pairs,
+    )
     from product_deduplication_spark.pipeline import prepare_docs
 
     sdf = wrap_documents_spark(_t(spark, sf, "documents"))
@@ -660,7 +637,7 @@ def q_simhash_candidates(spark, sf):
     docs = prepare_docs(sdf, cfg)
     feats = with_features(docs.select("doc_id", "text"), cfg)
     fp = feats.select("doc_id", "simhash")
-    cand = simhash_candidate_pairs(feats, cfg).select("src", "dst")
+    cand = simhash_candidate_pairs(feats).select("src", "dst")
 
     reps = fp.groupBy("simhash").agg(F.min("doc_id").alias("rep"))
     ra = reps.select(F.col("simhash").alias("_sh_a"), F.col("rep").alias("_ra"))
@@ -669,7 +646,7 @@ def q_simhash_candidates(spark, sf):
         ra.join(rb, F.col("_sh_a") < F.col("_sh_b"))
         .where(
             F.bit_count(F.col("_sh_a").bitwiseXOR(F.col("_sh_b")))
-            <= F.lit(cfg.simhash_hamming_max)
+            <= F.lit(HAMMING_MAX)
         )
         .select(F.least("_ra", "_rb").alias("src"), F.greatest("_ra", "_rb").alias("dst"))
     )
@@ -682,7 +659,7 @@ def q_simhash_candidates(spark, sf):
         .join(fb, "dst")
         .where(
             F.bit_count(F.col("_fa").bitwiseXOR(F.col("_fb")))
-            > F.lit(cfg.simhash_hamming_max)
+            > F.lit(HAMMING_MAX)
         )
     )
 
@@ -1159,13 +1136,13 @@ def q_agg_images_bulk(spark, sf):
 
 
 def q_media_decode_selfcheck(spark, sf):
-    """Multimodal decode as an oracle row (the real-codec backends of
-    operators/multimodal.py: stdlib-zlib PNG, stdlib-wave RIFF/PCM, with
-    magic-byte routing and per-row provenance). Payloads are synthesized
-    deterministically from the documents table — doc_id % 4 routes each doc
-    to 16-bit mono WAV / 8-bit stereo WAV (downmix) / grayscale PNG cycling
-    all five filter types / a non-codec blob that must stub
-    (datagen.media_payload_for_doc); NO external data. The engine path under
+    """Multimodal decode as an oracle row (MediaCodecBackend, the default
+    decoder of operators/multimodal.py: stdlib-zlib PNG, stdlib-wave
+    RIFF/PCM, with magic-byte routing and per-row provenance). Payloads are
+    synthesized deterministically from the documents table — doc_id % 4
+    routes each doc to 16-bit mono WAV / 8-bit stereo WAV (downmix) /
+    grayscale PNG cycling all five filter types / a non-codec blob that must
+    stub (datagen.media_payload_for_doc); NO external data. The engine path under
     test is extract_media_features (mapInPandas over Arrow batches); truth
     features are computed directly from the pre-encode sample/pixel arrays,
     so feature_match_ok == 1 proves the full container roundtrip (chunk
@@ -1180,10 +1157,7 @@ def q_media_decode_selfcheck(spark, sf):
     import pandas as pd
 
     from product_deduplication_spark.datagen import media_payload_for_doc
-    from product_deduplication_spark.operators.multimodal import (
-        MediaCodecBackend,
-        extract_media_features,
-    )
+    from product_deduplication_spark.operators.multimodal import extract_media_features
 
     d = _t(spark, sf, "documents").select("doc_id")
     synth_schema = (
@@ -1203,10 +1177,7 @@ def q_media_decode_selfcheck(spark, sf):
             )
 
     media = d.mapInPandas(synth, synth_schema)
-    decoded = extract_media_features(
-        media.select("doc_url", "kind", "payload"),
-        backend=MediaCodecBackend(dim=16, strict=False),
-    )
+    decoded = extract_media_features(media.select("doc_url", "kind", "payload"))
     j = decoded.join(
         media.select("doc_url", "expected_kind", "truth_feature"), "doc_url"
     )

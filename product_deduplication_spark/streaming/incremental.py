@@ -75,10 +75,11 @@ FEATURES_STAGE = "inc_features"
 CLUSTERS_STAGE = "inc_clusters"
 # catalog layout version. 2 = all-delta stages + batch_seq'd clusters +
 # precomputed band hashes in features; 3 = 32-bit shingle sets (array<int>);
-# 4 = every snapshot's schema in its manifest line (reads infer nothing).
+# 4 = every snapshot's schema in its manifest line (reads infer nothing);
+# 5 = warc_ts in DOCS (winners order by the earliest crawl, as in run_dedup).
 # Catalogs written by older code would silently corrupt state (or fail the
 # features union with a type mismatch) — refuse loudly instead.
-FORMAT_VERSION = 4
+FORMAT_VERSION = 5
 
 
 def _latest_per_doc(union: DataFrame) -> DataFrame:
@@ -105,8 +106,9 @@ def _check_format(catalog: SnapshotCatalog) -> None:
         raise RuntimeError(
             f"incremental catalog at {catalog.root!r} has format {fmt!r}, this "
             f"code writes format {FORMAT_VERSION}: old snapshots lack the "
-            "schema in their manifest lines (format < 4), the precomputed "
-            "band-hash column or delta clusters snapshots. Rebuild the "
+            "schema in their manifest lines (format < 4), warc_ts in DOCS "
+            "(format < 5), the precomputed band-hash column or delta "
+            "clusters snapshots. Rebuild the "
             "catalog (re-run bootstrap)."
         )
 
@@ -187,7 +189,7 @@ def incremental_dedup(
     (``compact_snapshots``). At 10^12 docs this is the difference between a
     bounded housekeeping job every N batches and an O(corpus) rewrite."""
     cfg = cfg or DedupConfig()
-    new_prepared = prepare_docs(new_docs, cfg).select("url", "doc_id", "text")
+    new_prepared = prepare_docs(new_docs, cfg).select("url", "doc_id", "warc_ts", "text")
 
     # DOCS is the commit marker (written LAST) — its presence defines both
     # bootstrap and which docs count as already-processed

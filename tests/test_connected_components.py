@@ -119,7 +119,7 @@ def test_simhash_disabled_features_fail_loudly_in_simhash_join(spark):
     )
     assert feats.where(F.col("simhash").isNull()).count() == 6
     with _pytest.raises(Exception, match="simhash=False"):
-        simhash_candidate_pairs(feats, cfg).count()
+        simhash_candidate_pairs(feats).count()
 
 
 @pytest.mark.parametrize("seed", [0, 5])

@@ -8,7 +8,6 @@ import pytest
 from product_deduplication_spark.operators.enrichment import (
     barcode_bulk_rows,
     propagate_barcodes,
-    propagate_images,
 )
 
 PLU = "PRODUCT_IDENTIFIER_TYPE_PLU"
@@ -66,23 +65,6 @@ def test_bulk_rows_type_fill_and_override(rel, barcodes):
         ("w2", "5555555", "GTIN", "Yes"),
         ("w2", "6666666", "GTIN", "No"),
     ]
-
-
-def test_propagate_images_third_party_priority(spark, rel):
-    img = spark.createDataFrame(
-        [
-            ("w1", "img1.jpg", "IMAGE_SOURCE_X", "\\N", "\\N", "img1b.jpg",
-             "IMAGE_SOURCE_THIRD_PARTY_APPROVED"),
-            ("l1", "img2.jpg", "IMAGE_SOURCE_THIRD_PARTY_APPROVED", "\\N", "\\N", "\\N", "\\N"),
-        ],
-        "ucpc_entity_uuid string, image_1 string, image_source_1 string, "
-        "image_2 string, image_source_2 string, image_3 string, image_source_3 string",
-    )
-    out = propagate_images(rel, img).collect()
-    assert len(out) == 1
-    r = out[0]
-    # third-party-approved beats slot order; winner side beats loser side
-    assert (r["winner_entity_uuid"], r["image_url"]) == ("w1", "img1b.jpg")
 
 
 def test_agg_images_bulk_reference_shape(spark):

@@ -1,10 +1,11 @@
 """Every entry point gives the same input the same meaning: ``run_dedup``,
 ``incremental_dedup`` (bootstrap and delta batches) and the spark-submit job
 agree on an empty corpus and on corpora of NULL, empty, short and
-exact-duplicate texts."""
+exact-duplicate texts, and pick the same winner."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import subprocess
@@ -150,3 +151,31 @@ def test_empty_delta_leaves_the_assignment_unchanged(spark, tmp_path):
     before = set(incremental_dedup(spark, cat, _frame(spark, pdf), CFG).select(cols).collect())
     after = incremental_dedup(spark, cat, _frame(spark, _docs([])), CFG).select(cols).collect()
     assert set(after) == before and len(after) == len(before) == 4
+
+
+@pytest.mark.slow
+def test_earliest_crawl_wins_at_every_entry_point(spark, tmp_path):
+    """Two byte-identical copies: the one with the earlier ``warc_ts`` wins
+    in ``run_dedup``, in a bootstrap batch, and when a delta batch brings
+    the earlier copy after the later one. The later copy has the smaller
+    url, so a winner order that drops ``warc_ts`` picks it instead."""
+    later, earlier, other = (f"https://e.example/{c}" for c in "abc")
+    rows = [(later, dt.datetime(2025, 1, 31), LONG),
+            (earlier, dt.datetime(2025, 1, 1), LONG),
+            (other, dt.datetime(2025, 1, 15), SHORT)]
+
+    def frame(rs):
+        return spark.createDataFrame(rs, "url string, warc_ts timestamp, text string")
+
+    def winners(clusters) -> set:
+        return {r["url"] for r in clusters.where("is_winner").select("url").collect()}
+
+    want = {earlier, other}
+    res = run_dedup(frame(rows), CFG)
+    assert winners(res.clusters) == want
+    res.release()
+    boot = SnapshotCatalog(spark, str(tmp_path / "boot"))
+    assert winners(incremental_dedup(spark, boot, frame(rows), CFG, auto_compact=None)) == want
+    cat = SnapshotCatalog(spark, str(tmp_path / "delta"))
+    incremental_dedup(spark, cat, frame([rows[0], rows[2]]), CFG, auto_compact=None)
+    assert winners(incremental_dedup(spark, cat, frame([rows[1]]), CFG, auto_compact=None)) == want

@@ -10,7 +10,7 @@ from product_deduplication_spark.operators.knn import (
     brute_force_topk,
 )
 from product_deduplication_spark.operators.multimodal import (
-    DecodeBackend,
+    MediaCodecBackend,
     exact_media_dedup,
     extract_media_features,
     repartition_by_bytes,
@@ -65,7 +65,7 @@ def test_strict_backend_raises(media):
     import py4j
 
     with pytest.raises(Exception) as exc:
-        extract_media_features(media, DecodeBackend(strict=True)).collect()
+        extract_media_features(media, MediaCodecBackend(strict=True)).collect()
     assert "NotImplementedError" in str(exc.value) or isinstance(
         exc.value, py4j.protocol.Py4JJavaError
     )

@@ -284,7 +284,6 @@ def test_no_forced_broadcast_of_corpus_sides_across_operators(spark):
         agg_images_bulk_reference_shape,
         barcode_bulk_rows,
         propagate_barcodes,
-        propagate_images,
     )
     from product_deduplication_spark.operators.winner import score_entities
 
@@ -333,7 +332,6 @@ def test_no_forced_broadcast_of_corpus_sides_across_operators(spark):
         "propagate_barcodes": propagated,
         "barcode_bulk_rows": barcode_bulk_rows(propagated, barcodes),
         "agg_images_bulk": agg_images_bulk_reference_shape(rel, imgs, n_slots=1),
-        "propagate_images": propagate_images(rel, imgs, n_slots=1),
         "bootstrap_links": boot_links,
         "upsert_links": ups_links,
         "append_catalog": app_cat,

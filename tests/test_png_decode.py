@@ -1,4 +1,4 @@
-"""PNG decode backend: stdlib-zlib decoder vs an independent encoder.
+"""PNG decode path of MediaCodecBackend: stdlib-zlib decoder vs an independent encoder.
 
 The test-side encoder applies the PNG spec's FORWARD filters (the decoder
 implements the inverse), so a roundtrip equality per filter type validates
@@ -14,7 +14,7 @@ import numpy as np
 import pytest
 
 from product_deduplication_spark.operators.multimodal import (
-    PngDecodeBackend,
+    MediaCodecBackend,
     decode_png,
     extract_media_features,
     png_grid_feature,
@@ -114,7 +114,7 @@ def test_golden_grid_feature():
     grayscale gradient pooled onto the 4x4 grid."""
     gray = np.arange(64, dtype=np.uint8).reshape(8, 8, 1)
     png = encode_png(gray, filter_type=2)
-    got = PngDecodeBackend().decode_with_kind(png)
+    got = MediaCodecBackend().decode_with_kind(png)
     assert got[1] == "png-stdlib"
     # independent expectation: mean of each 2x2 block / 255, L2-normalized
     blocks = gray[:, :, 0].astype(np.float64).reshape(4, 2, 4, 2).mean(axis=(1, 3))
@@ -130,7 +130,7 @@ def test_constant_image_feature_is_uniform_unit_vector():
 
 
 def test_spark_path_mixed_payloads_per_row_provenance(spark):
-    """extract_media_features with the PNG backend over a mixed media table:
+    """extract_media_features with the codec backend over a mixed media table:
     PNG rows get real decoded features (png-stdlib), non-PNG rows fall back
     to the labeled stub; strict mode raises on the non-PNG row."""
     rng = np.random.default_rng(3)
@@ -144,7 +144,7 @@ def test_spark_path_mixed_payloads_per_row_provenance(spark):
         "meta struct<mime string, width int, height int, duration_ms int>"
     )
     media = spark.createDataFrame(rows, schema)
-    feats = {r["doc_url"]: r for r in extract_media_features(media, PngDecodeBackend()).collect()}
+    feats = {r["doc_url"]: r for r in extract_media_features(media, MediaCodecBackend()).collect()}
     assert feats["u_png"]["feature_kind"] == "png-stdlib"
     assert feats["u_jpg"]["feature_kind"] == "stub"
     expected = png_grid_feature(decode_png(png_payload))
@@ -153,10 +153,10 @@ def test_spark_path_mixed_payloads_per_row_provenance(spark):
     import py4j
 
     with pytest.raises(Exception) as exc:
-        extract_media_features(media, PngDecodeBackend(strict=True)).collect()
+        extract_media_features(media, MediaCodecBackend(strict=True)).collect()
     assert "NotImplementedError" in str(exc.value) or isinstance(
         exc.value, py4j.protocol.Py4JJavaError
     )
     png_only = spark.createDataFrame([rows[0]], schema)
-    strict_rows = extract_media_features(png_only, PngDecodeBackend(strict=True)).collect()
+    strict_rows = extract_media_features(png_only, MediaCodecBackend(strict=True)).collect()
     assert strict_rows[0]["feature_kind"] == "png-stdlib"

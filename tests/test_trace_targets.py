@@ -5,11 +5,13 @@
 ``pipeline`` and ``streaming.incremental`` modules via ``getattr``, and the
 catalog layer by replacing methods on the ``SnapshotCatalog`` instance. A
 refactor that renames or drops one of those would break traced runs only
-when they are next taken; this pins the names in the unit suite.
+when they are next taken; this pins the names in the unit suite, together
+with the rest of the engine surface the two harnesses call.
 """
 
 from __future__ import annotations
 
+import inspect
 import os
 
 import pytest
@@ -17,6 +19,14 @@ import pytest
 from perfbench.workloads import BATCH_LAYERS, INCREMENTAL_LAYERS, IncrementalCatalog
 from product_deduplication_spark import pipeline
 from product_deduplication_spark.catalog import SnapshotCatalog
+from product_deduplication_spark.config import DedupConfig
+from product_deduplication_spark.functions.features import with_features
+from product_deduplication_spark.operators.connected_components import (
+    assign_clusters_contracted,
+)
+from product_deduplication_spark.operators.exact_dedup import exact_duplicate_edges
+from product_deduplication_spark.operators.lsh import candidate_pairs
+from product_deduplication_spark.operators.verify import verify_pairs
 from product_deduplication_spark.streaming import incremental
 
 
@@ -42,3 +52,28 @@ def test_catalog_trace_targets_resolve(spark, tmp_path):
     entry = cat.write_stage(spark.range(7), "s")
     assert entry["rows"] == 7
     assert os.path.isdir(entry["path"])
+
+
+def test_harness_calls_bind_to_the_engine():
+    """The stage names perfbench reads in traced passes, the keywords it
+    passes, and the calls ``bench.py``'s scaling child makes, bound to the
+    current signatures (no Spark job runs)."""
+    stages = (incremental.DOCS_STAGE, incremental.FEATURES_STAGE, incremental.CLUSTERS_STAGE)
+    assert all(isinstance(s, str) for s in stages) and len(set(stages)) == 3
+    cfg = DedupConfig()
+    df = object()
+    calls = [
+        (incremental.incremental_dedup, (df, df, df, cfg),
+         {"auto_compact": 16, "compact_tier_fraction": 0.5}),
+        (pipeline.run_dedup, (df, cfg), {"use_simhash": True}),
+        (pipeline.prepare_docs, (df, cfg), {}),
+        (with_features, (df, cfg), {"simhash": False}),
+        (candidate_pairs, (df, cfg), {}),
+        (verify_pairs, (df, df, cfg), {}),
+        (exact_duplicate_edges, (df, "doc_id", "text"), {}),
+        (assign_clusters_contracted, (df, df, df, "doc_id"), {}),
+        (pipeline.pick_winners, (df,), {}),
+    ]
+    for fn, args, kwargs in calls:
+        inspect.signature(fn).bind(*args, **kwargs)
+    assert isinstance(cfg.min_doc_chars, int)

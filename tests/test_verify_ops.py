@@ -11,7 +11,7 @@ import pytest
 
 from product_deduplication_spark.config import DedupConfig
 from product_deduplication_spark.functions import hashing
-from product_deduplication_spark.functions.features import with_features
+from product_deduplication_spark.functions.features import SEED, with_features
 from product_deduplication_spark.functions.normalize import title_case
 from product_deduplication_spark.operators.verify import MARGIN, N_MIN, verify_pairs
 from product_deduplication_spark.oracle.brute_force import exact_jaccard_pairs, shingle_sets
@@ -69,7 +69,7 @@ def test_prefilter_keeps_short_near_copies(spark):
     for _ in range(600):
         u = rng.choice(2**32, size=22, replace=False).astype(np.uint32)
         sets += [np.unique(u[:20]), np.unique(u[2:])]
-    sigs = list(hashing.oph_signatures(sets, hashing.minhash_seeds(cfg.num_hashes, cfg.seed)))
+    sigs = list(hashing.oph_signatures(sets, hashing.minhash_seeds(cfg.num_hashes, SEED)))
     # the estimate verify computes, on 31-bit truncated signatures
     est = [np.mean((a & 0x7FFFFFFF) == (b & 0x7FFFFFFF)) for a, b in zip(sigs[::2], sigs[1::2])]
     assert min(est) < cfg.jaccard_threshold - MARGIN

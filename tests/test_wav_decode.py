@@ -1,4 +1,4 @@
-"""WAV decode backend: stdlib-wave decoder vs an independent RIFF writer.
+"""WAV decode path of MediaCodecBackend: stdlib-wave decoder vs an independent RIFF writer.
 
 The test-side encoder builds the RIFF/WAVE container with raw ``struct``
 packing (it never imports ``wave``), so container parsing, sample-width
@@ -16,7 +16,6 @@ import pytest
 from product_deduplication_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     MediaCodecBackend,
-    WavDecodeBackend,
     decode_wav,
     extract_media_features,
     wav_envelope_feature,
@@ -111,7 +110,7 @@ def test_envelope_feature_hand_computed():
 def test_envelope_orders_silence_below_tone():
     t = np.arange(4000) / 8000.0
     x = np.concatenate([np.zeros(4000), 0.8 * np.sin(2 * np.pi * 300 * t)])
-    feat, kind = WavDecodeBackend(dim=16).decode_with_kind(encode_wav(x))
+    feat, kind = MediaCodecBackend(dim=16).decode_with_kind(encode_wav(x))
     assert kind == "wav-stdlib"
     assert max(feat[:8]) < min(feat[8:])
 
@@ -125,10 +124,10 @@ def test_invalid_wav_raises_and_backend_falls_back():
     with pytest.raises(ValueError):
         decode_wav(b"RIFFxxxxWAVEgarbage")
     # non-WAV payload: stub in default mode, raise in strict
-    v, kind = WavDecodeBackend().decode_with_kind(b"not audio at all")
+    v, kind = MediaCodecBackend().decode_with_kind(b"not audio at all")
     assert kind == "stub" and v is not None
     with pytest.raises(NotImplementedError):
-        WavDecodeBackend(strict=True).decode_with_kind(b"not audio at all")
+        MediaCodecBackend(strict=True).decode_with_kind(b"not audio at all")
 
 
 def test_codec_router_mixed_table(spark):
@@ -143,10 +142,8 @@ def test_codec_router_mixed_table(spark):
         ("u://bin", "video", bytearray(b"\x00\x01opaque"), ("video/mp4", None, None, 99)),
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = {
-        r["doc_url"]: r
-        for r in extract_media_features(media, MediaCodecBackend()).collect()
-    }
+    # no backend given: the default decodes PNG and WAV, not only stubs
+    feats = {r["doc_url"]: r for r in extract_media_features(media).collect()}
     assert feats["u://png"]["feature_kind"] == "png-stdlib"
     assert feats["u://wav"]["feature_kind"] == "wav-stdlib"
     assert feats["u://bin"]["feature_kind"] == "stub"
