@@ -460,13 +460,3 @@ def band_hashes_from_signatures(sig: np.ndarray, n_bands: int) -> np.ndarray:
     for j in range(r):
         h = ((h ^ s[:, :, j]) * _FNV_PRIME) & _U64_MAX
     return splitmix64(h.reshape(-1)).reshape(n_docs, n_bands).view(np.int64)
-
-
-def hamming_distance64(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Popcount of xor for int64/uint64 arrays (vectorized)."""
-    x = (a.view(np.uint64) ^ b.view(np.uint64)).copy()
-    cnt = np.zeros(x.shape, dtype=np.int64)
-    while x.any():
-        cnt += (x & np.uint64(1)).astype(np.int64)
-        x >>= np.uint64(1)
-    return cnt

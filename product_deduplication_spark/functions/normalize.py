@@ -19,8 +19,8 @@ SURVEY.md P3-P10) and its fuzzy verification (``reference/static.py:203-215,
 - ``token_sort_ratio``: pure-python Levenshtein ratio on sorted-token
   strings (fuzzywuzzy is not installed; this is the same formula
   round(100 * (1 - dist/lensum)) fuzzywuzzy uses)
-- ``fuzzy_name_match``: the V4 + V5 predicate over a pair relation, shared
-  by the grocery parity pipeline and barcode linkage
+- ``fuzzy_name_match``: the V4 + V5 predicate over a pair relation, used
+  by the grocery parity pipeline
 """
 
 from __future__ import annotations

@@ -18,7 +18,7 @@ Training-data-pipeline ops over binary payload columns. One decoder,
 
 Everything Spark-side is real and tested either way: schemas, Arrow batch
 shapes, ``mapInPandas`` streaming (binary payloads never accumulate on the
-driver), partition sizing by byte budget.
+driver).
 
 Schema convention:
     media(doc_url string, kind string, payload binary,
@@ -34,7 +34,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -308,8 +308,7 @@ def extract_media_features(
     """mapInPandas over binary payloads → per-item features + content hash.
 
     Scale notes: ``mapInPandas`` streams Arrow batches, so a partition of
-    large blobs never materializes fully in one Python list; size the
-    partitions upstream with ``repartition_by_bytes``.
+    large blobs never materializes fully in one Python list.
     """
     backend = backend or MediaCodecBackend()
 
@@ -340,51 +339,3 @@ def extract_media_features(
             )
 
     return media.mapInPandas(gen, FEATURE_SCHEMA)
-
-
-def repartition_by_bytes(
-    media: DataFrame, target_bytes: int = 64 << 20, size_col_expr=None
-) -> DataFrame:
-    """Repartition a blob table so each partition holds ~target_bytes of
-    payload — the knob that keeps Arrow batches memory-safe for media."""
-    sized = media.withColumn("_sz", size_col_expr or F.length("payload"))
-    total = sized.agg(F.coalesce(F.sum("_sz"), F.lit(0))).collect()[0][0]
-    n = max(1, int(total / target_bytes) + 1)
-    return sized.repartition(n).drop("_sz")
-
-
-def exact_media_dedup(features: DataFrame) -> DataFrame:
-    """Byte-identical media dedup via content hash (same star-edge shape as
-    text exact dedup; same single-exchange window as exact_duplicate_edges —
-    the former groupBy + join-back shuffled the features twice)."""
-    w = Window.partitionBy("payload_sha256")
-    return (
-        features.select(
-            "doc_url",
-            F.min("doc_url").over(w).alias("hub"),
-            F.count("*").over(w).alias("n"),
-        )
-        .where((F.col("n") > 1) & (F.col("doc_url") != F.col("hub")))
-        .select(
-            F.col("hub").alias("src"),
-            F.col("doc_url").alias("dst"),
-            F.lit("media_exact").alias("method"),
-        )
-    )
-
-
-def synthesize_media(docs: DataFrame, kind: str = "image") -> DataFrame:
-    """Deterministic fake media table derived from a docs table — payload =
-    utf-8 of text (stand-in for encoded bytes), meta filled with plausible
-    values. Lets every media operator be exercised without codec libs."""
-    return docs.select(
-        F.col("url").alias("doc_url"),
-        F.lit(kind).alias("kind"),
-        F.encode("text", "utf-8").alias("payload"),
-        F.struct(
-            F.lit("application/octet-stream").alias("mime"),
-            F.lit(64).alias("width"),
-            F.lit(64).alias("height"),
-            F.lit(None).cast("int").alias("duration_ms"),
-        ).alias("meta"),
-    )

@@ -15,8 +15,8 @@ Spark-native decomposition is:
    fingerprints (boilerplate runs shared by > bucket_cap docs) are excluded
    from the join — AND from the containment denominator, so a contained doc
    made mostly of boilerplate is still found through its distinctive
-   fingerprints (a doc with zero surviving fingerprints is reported by
-   ``substring_hot_stats`` rather than silently dropped). A pair is a
+   fingerprints (a doc with zero surviving fingerprints gets no
+   candidates). A pair is a
    candidate when the smaller doc shares >= ``containment_frac`` of its
    *surviving* fingerprints with the larger.
 3. **Exact verification**: candidates join texts; vectorized Arrow UDF
@@ -121,32 +121,6 @@ def substring_candidate_pairs(
         .withColumn("frac", F.col("shared") / F.col("n_fp"))
         .where(F.col("frac") >= 0.6)
         .select("big", "small", "shared", F.col("n_fp").alias("small_total"), "frac")
-    )
-
-
-def substring_hot_stats(
-    docs: DataFrame, cfg: DedupConfig, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """No-silent-caps metric ("no silent caps" engine rule): one row per doc
-    with (n_fp_total, n_fp_hot, fully_hot). ``fully_hot = true`` docs have
-    EVERY fingerprint above bucket_cap — they cannot be matched by the
-    candidate join and must be counted/logged by the caller (the pipeline's
-    metrics snapshot), not dropped silently."""
-    k, w = 20, MIN_LEN - 20 + 1
-    fp_udf = make_fingerprint_udf(k, max(w, 2))
-    feats = docs.select(
-        F.col(id_col).alias("node"), fp_udf(F.col(text_col)).alias("fps")
-    ).where(F.size("fps") > 0)
-    ex = feats.select("node", F.explode("fps").alias("fp"))
-    # same single-exchange window as substring_candidate_pairs
-    return (
-        ex.withColumn("bn", F.count("*").over(Window.partitionBy("fp")))
-        .groupBy("node")
-        .agg(
-            F.count("*").alias("n_fp_total"),
-            F.sum((F.col("bn") > cfg.bucket_cap).cast("long")).alias("n_fp_hot"),
-        )
-        .withColumn("fully_hot", F.col("n_fp_hot") == F.col("n_fp_total"))
     )
 
 

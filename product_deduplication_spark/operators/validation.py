@@ -1,100 +1,15 @@
-"""Invariant checks + repair jobs (the reference's maintenance scripts).
+"""Label audit of the reference's maintenance scripts.
 
-Re-expresses ``reference/links_fix.py``, ``reference/canon_fix.py`` and
-``reference/validation.py`` (SURVEY.md §5 "invariant repair scripts doubling
-as checks") as DataFrame operators:
-
-- ``links_stats`` / ``corpus_stats``: the count-distinct audit prints
-  (``validation.py:9-36``, ``links_fix.py:8-12``) as a metrics row
-- ``fix_duplicate_leader_ids``: a canonical_leader mapped to >1
-  canonical_id is rewritten to the FIRST id (``links_fix.py:25-33,50-56``
-  — the pandas loop over a dup dict becomes one window + broadcast join)
-- ``fix_nan_leaders``: links with NULL canonical_leader get leader :=
-  canonical_member and fresh sequential ids above max
-  (``links_fix.py:14-23``)
-- ``dedupe_catalog_leaders``: duplicate canonical_leader rows keep the
-  first (``canon_fix.py:15``)
-- ``conservation_check``: "products lost in the process"
-  (``groups_creation.py:229-246``) as an assertable DataFrame
+``classification_accuracy`` re-expresses the agent-label accuracy print of
+``reference/clean_canonical.py:18-22`` as a one-row DataFrame. The links and
+catalog repair jobs (``reference/links_fix.py``, ``reference/canon_fix.py``)
+are not carried forward: no entry point produces the broken tables they
+mend.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
-
-from product_deduplication_spark.operators.canonical import assign_sequential_ids
-
-
-def links_stats(links: DataFrame) -> dict:
-    row = links.agg(
-        F.countDistinct("canonical_id").alias("n_ids"),
-        F.countDistinct("canonical_leader").alias("n_leaders"),
-        F.count("*").alias("n_rows"),
-    ).collect()[0]
-    return {"n_ids": row["n_ids"], "n_leaders": row["n_leaders"], "n_rows": row["n_rows"]}
-
-
-def fix_duplicate_leader_ids(links: DataFrame) -> DataFrame:
-    """links_fix.py:25-33: for each leader holding multiple canonical_ids,
-    rewrite all its rows to the first (minimum) id. The reference builds a
-    python dict from drop_duplicates and loops; here: min-id per leader via
-    aggregation, broadcast-joined back."""
-    non_null = links.where(F.col("canonical_leader").isNotNull()).withColumn(
-        "canonical_leader", F.lower(F.trim("canonical_leader"))
-    )
-    canon = non_null.groupBy("canonical_leader").agg(
-        F.min("canonical_id").alias("_fixed_id")
-    )
-    return (
-        non_null.join(canon, "canonical_leader")
-        .withColumn("canonical_id", F.col("_fixed_id"))
-        .drop("_fixed_id")
-    )
-
-
-def fix_nan_leaders(links: DataFrame) -> DataFrame:
-    """links_fix.py:14-23,44-62: NULL-leader rows get leader :=
-    canonical_member and fresh ids above the current max; returns the full
-    repaired links table."""
-    ok = fix_duplicate_leader_ids(links)
-    na = links.where(F.col("canonical_leader").isNull()).withColumn(
-        "canonical_leader", F.col("canonical_member")
-    )
-    if na.isEmpty():
-        return ok
-    max_id = ok.agg(F.coalesce(F.max("canonical_id"), F.lit(0))).collect()[0][0]
-    new_ids = assign_sequential_ids(
-        na.select("canonical_leader").distinct(),
-        ["canonical_leader"],
-        "_new_id",
-        start=int(max_id) + 1,
-    )
-    na = (
-        na.drop("canonical_id")
-        .join(new_ids, "canonical_leader")
-        .withColumnRenamed("_new_id", "canonical_id")
-        .select(*ok.columns)
-    )
-    return ok.unionByName(na)
-
-
-def dedupe_catalog_leaders(catalog: DataFrame) -> DataFrame:
-    """canon_fix.py:15: duplicate canonical_leader rows keep the first
-    (min canonical_id — the deterministic reading of pandas keep='first')."""
-    w = Window.partitionBy("canonical_leader").orderBy(F.asc("canonical_id"))
-    return (
-        catalog.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def conservation_check(before: DataFrame, after: DataFrame, key: str) -> DataFrame:
-    """groups_creation.py:229-246 'products missing': keys present before a
-    stage but absent after. Empty result == invariant holds."""
-    return before.select(key).distinct().join(
-        after.select(key).distinct(), key, "left_anti"
-    )
+from pyspark.sql import DataFrame, functions as F
 
 
 def classification_accuracy(links: DataFrame, label_col: str = "label") -> DataFrame:
@@ -110,14 +25,4 @@ def classification_accuracy(links: DataFrame, label_col: str = "label") -> DataF
         F.round(
             F.sum((norm == "true").cast("long")) / F.count("*"), 3
         ).alias("accuracy"),
-    )
-
-
-def losers_with_multiple_winners(relations: DataFrame) -> DataFrame:
-    """agg_barcodes_to_winner.py:27-28 audit: loser uuids appearing under
-    more than one winner."""
-    return (
-        relations.groupBy("loser_entity_uuid")
-        .agg(F.countDistinct("winner_entity_uuid").alias("n_winners"))
-        .where(F.col("n_winners") > 1)
     )

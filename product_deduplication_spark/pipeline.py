@@ -9,19 +9,23 @@ ingest(url, warc_ts, html, text, lang)
   → s5_verified:   exact Jaccard
   → cluster: contracted CC (exact stars folded into their hubs; graphs up
        to LOCAL_MAX_EDGES labelled on the driver, larger ones by the
-       large-star/small-star loop)
+       large-star/small-star loop; a delta batch instead runs plain CC
+       over exact ∪ near ∪ prior-assignment edges)
   → winner per cluster (longest text, earliest warc_ts tiebreak — webtext
        analog of winner selection, reference/winner_selection.py:108-109)
 
 Mirrors the reference entry point ``groups_creation.main``
 (``reference/groups_creation.py:249-304``) with the substitutions documented
-in SURVEY.md §2. ``run_dedup`` is the one definition of this sequence: the
-stages are lazy DataFrames unless its ``checkpoint`` hook materializes them
-(the spark-submit job snapshots each one through the catalog).
+in SURVEY.md §2. ``dedup_stages`` is the one definition of this sequence
+(s2 onwards): ``run_dedup`` is ``prepare_docs`` followed by one call, and
+every ``streaming.incremental`` batch is one call over the catalog state.
+The stages are lazy DataFrames unless the ``checkpoint`` hook materializes
+them (the spark-submit job snapshots each one through the catalog).
 """
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -29,6 +33,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from product_deduplication_spark.caching import CacheScope
 from product_deduplication_spark.config import DedupConfig
+# dedup_stages calls the operators below through this module (its ``ops``)
 from product_deduplication_spark.functions.features import make_extract_text_udf, with_features
 from product_deduplication_spark.operators.connected_components import (
     assign_clusters_contracted,
@@ -111,49 +116,82 @@ def pick_winners(clusters: DataFrame, length_col: str | None = None) -> DataFram
     return clusters.withColumn("is_winner", F.row_number().over(w) == 1)
 
 
-def clusters_to_groups(clusters: DataFrame) -> DataFrame:
-    """Reshape cluster assignments into the reference's groups-table shape
-    (group_id, leader, member, item_uuid, item_name) —
-    ``reference/groups_creation.py:292-294`` — so the canonical upsert
-    (operators/canonical.py) consumes webtext clusters unchanged."""
-    w = Window.partitionBy("cluster_id").orderBy(F.desc("is_winner"), F.asc("url"))
-    return clusters.select(
-        F.col("cluster_id").alias("group_id"),
-        F.first("url").over(w).alias("leader"),
-        F.col("url").alias("member"),
-        F.col("url").alias("item_uuid"),
-        F.col("url").alias("item_name"),
-    )
-
-
-def run_full(
-    df: DataFrame,
-    catalog,
-    cfg: DedupConfig | None = None,
+def dedup_stages(
+    ops,
+    docs: DataFrame,
+    cfg: DedupConfig,
+    new_docs: DataFrame | None = None,
+    prior_features: DataFrame | None = None,
+    prior_edges: DataFrame | None = None,
     use_simhash: bool = False,
-):
-    """Dedup + persistent canonical lifecycle in one call: run the pipeline,
-    then bootstrap or upsert the canonical tables through the snapshot
-    catalog (the reference's first-run/incremental branch,
-    ``reference/clean_canonical.py:296-338``). Returns (DedupResult,
-    canonical_catalog, canonical_links)."""
-    from product_deduplication_spark.operators.canonical import (
-        bootstrap_canonical,
-        upsert_canonical,
+    checkpoint: Callable[[str, Callable[[], DataFrame]], DataFrame] | None = None,
+) -> DedupResult:
+    """Stages s2-s5, CC and winners over the prepared ``docs`` (all of them).
+
+    Delta mode (``new_docs``): only ``new_docs`` are hashed, and exact and
+    LSH emit only edges with a new end (``delta_ids``). ``prior_features``
+    (the features of every doc not in ``new_docs``) join the LSH and verify
+    inputs; ``prior_edges`` (doc_id -> prior cluster_id as src, dst) keep
+    the prior clusters connected. ``res.features`` holds only the rows this
+    call hashed. SimHash candidates are not delta-restricted, so a delta
+    caller leaves ``use_simhash`` off.
+
+    ``ops`` is the calling module: every operator is looked up on it
+    (``ops.verify_pairs``), so one patched on ``pipeline`` or
+    ``streaming.incremental`` (the benchmark tracer labels its layers that
+    way) is the one that run calls. It must carry the operators the call
+    reaches (``assign_clusters`` only with ``prior_edges``)."""
+    checkpoint = checkpoint or (lambda _stage, compute: compute())
+    scope = CacheScope()
+    hashed = docs if new_docs is None else new_docs
+    delta_ids = None if new_docs is None else new_docs.select("doc_id")
+
+    # features feed 2-3 downstream consumers (and a delta caller's snapshot
+    # write) — cache once
+    feats = scope.persist(checkpoint(
+        "s2_features",
+        lambda: ops.with_features(eligible_docs(hashed, cfg).select("doc_id", "text"), cfg, simhash=use_simhash)
+        .select("doc_id", "shingles", "minhash", "simhash", "bands"),
+    ))
+    all_feats = feats if prior_features is None else scope.persist(prior_features.unionByName(feats))
+    exact = checkpoint(
+        "s3_exact",
+        lambda: ops.exact_duplicate_edges(eligible_docs(docs, cfg), "doc_id", "text", delta_ids=delta_ids),
     )
 
-    cfg = cfg or DedupConfig()
-    res = run_dedup(df, cfg, use_simhash=use_simhash)
-    groups = clusters_to_groups(res.clusters)
-    if catalog.has_stage("canonical_catalog"):
-        cat_df = catalog.read_stage("canonical_catalog")
-        links_df = catalog.read_stage("canonical_links")
-        cat_df, links_df = upsert_canonical(cat_df, links_df, groups)
+    def candidates() -> DataFrame:
+        pairs = ops.candidate_pairs(all_feats, cfg, delta_ids=delta_ids, scope=scope)
+        if use_simhash:
+            pairs = pairs.unionByName(ops.simhash_candidate_pairs(all_feats)).dropDuplicates(["src", "dst"])
+        return pairs
+
+    pairs = checkpoint("s4_candidates", candidates)
+    near = checkpoint("s5_verified", lambda: ops.verify_pairs(pairs, all_feats, cfg))
+
+    # winner ordering key computed BELOW the label join (see pick_winners:
+    # lets count-only consumers prune text out of the join exchange)
+    docs_len = docs.withColumn("_text_len", F.length("text"))
+    star, near_sd = exact.select("src", "dst"), near.select("src", "dst")
+    if prior_edges is None:
+        # exact-dup classes are star components already — contract them to
+        # their min-id hubs so the iterative CC runs on the near-dup graph
+        # only (label equality with the uncontracted CC is pinned in tests;
+        # at web scale the exact stars dominate the edge list)
+        clustered = ops.assign_clusters_contracted(docs_len, star, near_sd, "doc_id", scope=scope)
     else:
-        cat_df, links_df = bootstrap_canonical(groups)
-    catalog.write_stage(cat_df, "canonical_catalog")
-    catalog.write_stage(links_df, "canonical_links")
-    return res, catalog.read_stage("canonical_catalog"), catalog.read_stage("canonical_links")
+        # the prior edges are doc -> cluster stars over the whole state;
+        # contracting a delta batch's exact stars was measured not to pay
+        clustered = ops.assign_clusters(docs_len, star.unionByName(near_sd).unionByName(prior_edges), "doc_id")
+    clustered = ops.pick_winners(clustered, "_text_len").drop("_text_len")
+    return DedupResult(
+        docs=docs,
+        features=feats,
+        exact_edges=exact,
+        near_edges=near,
+        all_edges=exact.unionByName(near).dropDuplicates(["src", "dst"]),
+        clusters=clustered,
+        caches=scope,
+    )
 
 
 def run_dedup(
@@ -163,7 +201,8 @@ def run_dedup(
     validate_extraction: bool = False,
     checkpoint: Callable[[str, Callable[[], DataFrame]], DataFrame] | None = None,
 ) -> DedupResult:
-    """Run the batch pipeline over ``df``.
+    """Run the batch pipeline over ``df``: ``prepare_docs``, then
+    ``dedup_stages``.
 
     ``checkpoint(stage, compute)`` is called once per name in ``STAGES``, in
     order, and returns that stage's DataFrame; ``compute`` builds it. The
@@ -171,50 +210,9 @@ def run_dedup(
     ``get_or_compute`` snapshots each stage instead and resumes from the
     snapshots already written."""
     cfg = cfg or DedupConfig()
-    scope = CacheScope()
     checkpoint = checkpoint or (lambda _stage, compute: compute())
     docs = checkpoint(
         "s1_docs",
         lambda: prepare_docs(df, cfg, validate_extraction=validate_extraction).drop("html"),
     )
-    eligible = eligible_docs(docs, cfg)
-
-    # features feed 2-3 downstream consumers — cache once
-    feats = scope.persist(checkpoint(
-        "s2_features",
-        lambda: with_features(eligible.select("doc_id", "text"), cfg, simhash=use_simhash)
-        .select("doc_id", "shingles", "minhash", "simhash", "bands"),
-    ))
-    exact = checkpoint("s3_exact", lambda: exact_duplicate_edges(eligible, "doc_id", "text"))
-
-    def candidates() -> DataFrame:
-        pairs = candidate_pairs(feats, cfg, scope=scope)
-        if use_simhash:
-            pairs = pairs.unionByName(simhash_candidate_pairs(feats)).dropDuplicates(["src", "dst"])
-        return pairs
-
-    pairs = checkpoint("s4_candidates", candidates)
-    near = checkpoint("s5_verified", lambda: verify_pairs(pairs, feats, cfg))
-
-    all_edges = exact.unionByName(near).dropDuplicates(["src", "dst"])
-    # exact-dup classes are star components already — contract them to their
-    # min-id hubs so the iterative CC runs on the near-dup graph only (label
-    # equality with the uncontracted CC is pinned in tests; at web scale the
-    # exact stars dominate the edge list)
-    # winner ordering key computed BELOW the label join (see pick_winners:
-    # lets count-only consumers prune text out of the join exchange)
-    clustered = assign_clusters_contracted(
-        docs.withColumn("_text_len", F.length("text")),
-        exact.select("src", "dst"), near.select("src", "dst"), "doc_id",
-        scope=scope,
-    )
-    clustered = pick_winners(clustered, "_text_len").drop("_text_len")
-    return DedupResult(
-        docs=docs,
-        features=feats,
-        exact_edges=exact,
-        near_edges=near,
-        all_edges=all_edges,
-        clusters=clustered,
-        caches=scope,
-    )
+    return dedup_stages(sys.modules[__name__], docs, cfg, use_simhash=use_simhash, checkpoint=checkpoint)

@@ -1,12 +1,8 @@
-"""Typed reader/validator for the engine's primary input table.
+"""CSV reader and writer for the reference's catalog tables.
 
-BASELINE.json input_hint fixes the schema:
-    (url string, warc_ts timestamp, html binary, text string, lang string)
-
-``read_web_documents`` enforces it with an explicit StructType (the
-reference infers every schema via pd.read_csv — SURVEY.md §1.3; this engine
-never infers). ``validate_web_documents`` returns per-check violation counts
-the pipeline can assert on or write as a metrics row.
+The engine's primary input table has the BASELINE.json input_hint shape
+``(url string, warc_ts timestamp, html binary, text string, lang string)``
+and is read as parquet by each entry point.
 
 CSV reading (reference S1/S2, e.g. header offset at
 ``reference/match_barcode.py:22-25``) is covered by ``read_csv_catalog``:
@@ -15,18 +11,8 @@ explicit schema + header handling + column-name normalization via toDF.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-WEB_DOCUMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
 
 RAW_CATALOG_SCHEMA = T.StructType(
     [
@@ -36,24 +22,6 @@ RAW_CATALOG_SCHEMA = T.StructType(
         T.StructField("image_url", T.StringType(), True),
     ]
 )
-
-
-def read_web_documents(spark: SparkSession, path: str) -> DataFrame:
-    df = spark.read.schema(WEB_DOCUMENTS_SCHEMA).parquet(path)
-    return df
-
-
-def validate_web_documents(df: DataFrame) -> dict:
-    """Violation counts for the input invariants: url non-null + unique,
-    text present. 0 everywhere == clean ingest."""
-    row = df.agg(
-        F.sum(F.when(F.col("url").isNull(), 1).otherwise(0)).alias("null_url"),
-        (F.count("*") - F.countDistinct("url")).alias("dup_url"),
-        F.sum(F.when(F.col("text").isNull() | (F.length("text") == 0), 1).otherwise(0)).alias(
-            "empty_text"
-        ),
-    ).collect()[0]
-    return {k: int(row[k] or 0) for k in ("null_url", "dup_url", "empty_text")}
 
 
 def read_csv_catalog(

@@ -2,26 +2,23 @@
 
 Capability analog of the reference's canonical upsert
 (``reference/clean_canonical.py:102-209,296-338``, V11 direct-match short
-circuit) at webtext scale:
+circuit) at webtext scale. The engine stages are ``pipeline.dedup_stages``,
+the body ``run_dedup`` calls too: a bootstrap batch runs exactly
+``run_dedup``'s stages (SimHash off), and a delta batch runs them in delta
+mode:
 
-1. **Exact edges** — ``exact_duplicate_edges`` in delta mode: every
-   ``sha2(text)`` class that contains a new doc emits its star edges, so a
-   byte-identical copy of a clustered doc joins that cluster (V11:
-   "normalized name already a canonical member → link"). The copy still
-   goes through features, LSH and verify like any other new doc.
-2. **Feature reuse** — MinHash/shingles are computed ONLY for genuinely new
-   docs (those ``eligible_docs`` keeps, as in ``run_dedup``); prior
-   snapshots' features are read back from the catalog. At 10^12 docs this
-   is the difference between re-hashing the corpus and hashing the daily
-   delta.
-3. **Delta-restricted candidates** — LSH banding runs in delta mode
-   (``candidate_pairs(..., delta_ids=new ids)``): only buckets touching a
-   new doc are considered and only (new, any) pairs are emitted. Old-old
-   edges were found by the batch that added the younger doc, so per-batch
-   cost is proportional to the delta, not the corpus.
-4. **Cluster stitching** — verified new edges union prior-assignment-edges
-   (doc→cluster_id edges keep old clusters intact and merge them when a
-   new doc bridges two), then connected components reassign.
+- **Feature reuse** — MinHash/shingles are computed ONLY for the new docs
+  (``new_docs``); prior snapshots' features are read back from the catalog
+  (``prior_features``). At 10^12 docs this is the difference between
+  re-hashing the corpus and hashing the daily delta.
+- **Delta-restricted edges** — exact and LSH run with ``delta_ids``: only
+  ``sha2(text)`` classes and LSH buckets that contain a new doc emit edges,
+  and only (new, any) pairs (V11: a byte-identical copy of a clustered doc
+  joins that cluster). Old-old edges were found by the batch that added the
+  younger doc, so per-batch cost follows the delta, not the corpus.
+- **Cluster stitching** — prior assignments enter CC as doc -> cluster_id
+  edges (``prior_edges``), which keep old clusters intact and merge them
+  when a new doc bridges two.
 
 **The batch's new docs are computed once.** ``truly_new`` is the batch
 minus the urls that already have a committed DOCS row (the anti-join runs
@@ -58,17 +55,22 @@ assumes every DOCS member already has an assignment.)
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import DataFrame, Window, functions as F
 
-from product_deduplication_spark.caching import CacheScope
 from product_deduplication_spark.catalog import SnapshotCatalog
 from product_deduplication_spark.config import DedupConfig
+# dedup_stages calls the operators below through this module (its ``ops``)
 from product_deduplication_spark.functions.features import with_features
-from product_deduplication_spark.operators.connected_components import assign_clusters
+from product_deduplication_spark.operators.connected_components import (
+    assign_clusters,
+    assign_clusters_contracted,
+)
 from product_deduplication_spark.operators.exact_dedup import exact_duplicate_edges
 from product_deduplication_spark.operators.lsh import candidate_pairs
 from product_deduplication_spark.operators.verify import verify_pairs
-from product_deduplication_spark.pipeline import eligible_docs, pick_winners, prepare_docs
+from product_deduplication_spark.pipeline import dedup_stages, pick_winners, prepare_docs
 
 DOCS_STAGE = "inc_docs"
 FEATURES_STAGE = "inc_features"
@@ -196,10 +198,12 @@ def incremental_dedup(
     bootstrap = not catalog.has_stage(DOCS_STAGE)
     # truly_new is materialized once (module docstring): every consumer
     # below reads the checkpoint instead of re-running the source scan and
-    # the anti-join
+    # the anti-join. The stages look each operator up on this module, so one
+    # patched here (the benchmark tracer's delta layers) is the one they call
+    ops = sys.modules[__name__]
     if bootstrap:
-        truly_new = all_docs = new_prepared.localCheckpoint()
-        old_feats = old_assign = prior_edges = None
+        truly_new = new_prepared.localCheckpoint()
+        res = dedup_stages(ops, truly_new, cfg)
     else:
         _check_format(catalog)
         old_docs = catalog.read_stage_union(DOCS_STAGE)
@@ -211,65 +215,20 @@ def incremental_dedup(
         # leaves the retried batch's features twice across snapshots.
         old_feats = catalog.read_stage_union(FEATURES_STAGE).dropDuplicates(["doc_id"])
         old_assign = read_clusters(catalog)
-        all_docs = old_docs.dropDuplicates(["doc_id"]).unionByName(truly_new)
-        # prior assignments as edges keep existing clusters connected
-        prior_edges = old_assign.select(
-            F.col("doc_id").alias("src"), F.col("cluster_id").alias("dst")
+        res = dedup_stages(
+            ops,
+            old_docs.dropDuplicates(["doc_id"]).unionByName(truly_new),
+            cfg,
+            new_docs=truly_new,
+            prior_features=old_feats,
+            prior_edges=old_assign.select(F.col("doc_id").alias("src"), F.col("cluster_id").alias("dst")),
         )
-
-    # every cache this batch creates (features + candidate_pairs internals)
-    # is released before returning — an ingest loop runs this once per
-    # batch in one long-lived session, so leaked CacheManager entries
-    # would accumulate unboundedly (see caching.py)
-    scope = CacheScope()
-    # feature reuse: hash ONLY the new docs run_dedup would hash. Persisted
-    # on its own so the FEATURES snapshot write below reads the cache
-    # instead of running the Arrow UDF a second time. No SimHash channel
-    # here, so the fingerprint column stays NULL (simhash=False)
-    new_feats = scope.persist(
-        with_features(
-            eligible_docs(truly_new, cfg).select("doc_id", "text"), cfg, simhash=False
-        ).select("doc_id", "shingles", "minhash", "simhash", "bands")
-    )
-    feats = (
-        new_feats if old_feats is None
-        else scope.persist(old_feats.unionByName(new_feats))
-    )
-
-    # exact edges, delta-restricted like LSH: only hash classes containing a
-    # new doc emit edges (old-only classes are already inside prior clusters)
-    delta_ids = None if bootstrap else truly_new.select("doc_id")
-    exact_edges = exact_duplicate_edges(
-        eligible_docs(all_docs, cfg), "doc_id", "text", delta_ids=delta_ids
-    ).select("src", "dst")
-
-    # delta mode: only (new, any) candidate pairs — per-batch LSH cost is
-    # proportional to the delta, not the accumulated corpus
-    pairs = candidate_pairs(feats, cfg, delta_ids=delta_ids, scope=scope)
-    near = verify_pairs(pairs, feats, cfg).select("src", "dst")
-
-    edges = exact_edges.unionByName(near)
-    if prior_edges is not None:
-        edges = edges.unionByName(prior_edges)
-    # _text_len below the label join: keeps the text payload out of the
-    # join exchange (this select prunes it from the window already)
-    clusters = (
-        pick_winners(
-            assign_clusters(
-                all_docs.withColumn("_text_len", F.length("text")),
-                edges,
-                "doc_id",
-            ),
-            "_text_len",
-        )
-        .drop("_text_len")
-        .select("url", "doc_id", "cluster_id", "is_winner")
-    )
+    clusters = res.clusters.select("url", "doc_id", "cluster_id", "is_winner")
 
     # the CLUSTERS delta: new docs + old docs whose assignment or winner
     # flag changed (a new doc can bridge two old clusters or unseat an old
     # winner). Everything else is already correct in prior snapshots.
-    if old_assign is None:
+    if bootstrap:
         delta_clusters = clusters
     else:
         old_cmp = old_assign.select(
@@ -293,14 +252,16 @@ def incremental_dedup(
     # (harmless extras if the batch dies here), CLUSTERS next, DOCS last as
     # the commit marker that flips the batch to "processed"
     fmt = {"format": FORMAT_VERSION}
-    catalog.write_stage(new_feats, FEATURES_STAGE, metrics=fmt)
+    catalog.write_stage(res.features, FEATURES_STAGE, metrics=fmt)
     catalog.write_stage(
         delta_clusters,
         CLUSTERS_STAGE,
         metrics=fmt | {"bootstrap": bootstrap, "batch_seq": batch_seq},
     )
     catalog.write_stage(truly_new, DOCS_STAGE, metrics=fmt)
-    scope.release()
+    # an ingest loop runs one batch after another in one long-lived session,
+    # so the batch's caches go before it returns (see caching.py)
+    res.release()
     if auto_compact is not None:
         active = catalog.active_snapshots(CLUSTERS_STAGE)
         if len(active) > auto_compact:

@@ -1,7 +1,8 @@
 """Every entry point gives the same input the same meaning: ``run_dedup``,
 ``incremental_dedup`` (bootstrap and delta batches) and the spark-submit job
 agree on an empty corpus and on corpora of NULL, empty, short and
-exact-duplicate texts, and pick the same winner."""
+exact-duplicate texts, and pick the same winner; the driver's ``entry()``
+and a bootstrap batch agree on the sf0.001 documents."""
 
 from __future__ import annotations
 
@@ -179,3 +180,17 @@ def test_earliest_crawl_wins_at_every_entry_point(spark, tmp_path):
     cat = SnapshotCatalog(spark, str(tmp_path / "delta"))
     incremental_dedup(spark, cat, frame([rows[0], rows[2]]), CFG, auto_compact=None)
     assert winners(incremental_dedup(spark, cat, frame([rows[1]]), CFG, auto_compact=None)) == want
+
+
+@pytest.mark.slow
+def test_entry_and_bootstrap_batch_agree(spark, tmp_path, documents):
+    """``entry()`` (``run_dedup`` over the wrapped sf0.001 documents) and a
+    bootstrap ``incremental_dedup`` of the same frame give one partition."""
+    import __spark_entry__
+    from product_deduplication_spark.datagen import wrap_documents_spark
+
+    want = _partition(__spark_entry__.entry(spark))
+    cat = SnapshotCatalog(spark, str(tmp_path / "inc"))
+    got = incremental_dedup(spark, cat, wrap_documents_spark(documents), CFG, auto_compact=None)
+    assert _partition(got) == want
+    assert len(want) < documents.count()  # the corpus has duplicates to find

@@ -10,6 +10,16 @@ from product_deduplication_spark.config import DedupConfig
 from product_deduplication_spark.functions import hashing
 
 
+def hamming_distance64(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Popcount of xor for int64/uint64 arrays (vectorized)."""
+    x = (a.view(np.uint64) ^ b.view(np.uint64)).copy()
+    cnt = np.zeros(x.shape, dtype=np.int64)
+    while x.any():
+        cnt += (x & np.uint64(1)).astype(np.int64)
+        x >>= np.uint64(1)
+    return cnt
+
+
 def test_splitmix64_deterministic_and_mixing():
     x = np.arange(1000, dtype=np.uint64)
     a = hashing.splitmix64(x)
@@ -102,11 +112,11 @@ def test_simhash_close_for_similar_docs():
     shs = hashing.simhash64(
         [hashing.token_hashes(base), hashing.token_hashes(nearly), hashing.token_hashes(different)]
     )
-    d_near = hashing.hamming_distance64(shs[0:1], shs[1:2])[0]
-    d_far = hashing.hamming_distance64(shs[0:1], shs[2:3])[0]
+    d_near = hamming_distance64(shs[0:1], shs[1:2])[0]
+    d_far = hamming_distance64(shs[0:1], shs[2:3])[0]
     assert d_near < d_far
     assert d_near <= 10
-    assert hashing.hamming_distance64(shs[0:1], shs[0:1])[0] == 0
+    assert hamming_distance64(shs[0:1], shs[0:1])[0] == 0
 
 
 def test_candidate_probability_scurve():

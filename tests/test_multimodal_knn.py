@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from product_deduplication_spark.operators.knn import (
     ann_candidates,
@@ -11,10 +12,7 @@ from product_deduplication_spark.operators.knn import (
 )
 from product_deduplication_spark.operators.multimodal import (
     MediaCodecBackend,
-    exact_media_dedup,
     extract_media_features,
-    repartition_by_bytes,
-    synthesize_media,
 )
 
 
@@ -24,7 +22,19 @@ def media(spark):
         [("u1", "same text payload"), ("u2", "same text payload"), ("u3", "different")],
         "url string, text string",
     )
-    return synthesize_media(docs)
+    # payload = utf-8 of the text: a stand-in for encoded bytes that every
+    # decoder route stubs deterministically
+    return docs.select(
+        F.col("url").alias("doc_url"),
+        F.lit("image").alias("kind"),
+        F.encode("text", "utf-8").alias("payload"),
+        F.struct(
+            F.lit("application/octet-stream").alias("mime"),
+            F.lit(64).alias("width"),
+            F.lit(64).alias("height"),
+            F.lit(None).cast("int").alias("duration_ms"),
+        ).alias("meta"),
+    )
 
 
 def test_media_schema_and_features(media):
@@ -54,13 +64,6 @@ def test_null_payload_rows_have_null_feature_kind(spark):
     assert row["feature"] is None and row["feature_kind"] is None
 
 
-def test_media_exact_dedup(media):
-    feats = extract_media_features(media)
-    edges = exact_media_dedup(feats).collect()
-    assert len(edges) == 1
-    assert {edges[0]["src"], edges[0]["dst"]} == {"u1", "u2"}
-
-
 def test_strict_backend_raises(media):
     import py4j
 
@@ -69,12 +72,6 @@ def test_strict_backend_raises(media):
     assert "NotImplementedError" in str(exc.value) or isinstance(
         exc.value, py4j.protocol.Py4JJavaError
     )
-
-
-def test_repartition_by_bytes(media):
-    out = repartition_by_bytes(media, target_bytes=16)
-    assert out.count() == 3
-    assert out.rdd.getNumPartitions() >= 3
 
 
 def test_ann_matches_bruteforce_topk(spark, sf_dir):

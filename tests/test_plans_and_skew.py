@@ -267,10 +267,10 @@ def test_verify_join_never_broadcasts_features(spark):
 
 def test_no_forced_broadcast_of_corpus_sides_across_operators(spark):
     """Sweep the operator surface: NO operator may carry an unconditional
-    broadcast hint on a corpus-derived side (relations, barcodes, images,
-    links, features all grow with the catalog — a forced broadcast OOMs the
+    broadcast hint on a corpus-derived side (relations, images, links,
+    features all grow with the catalog — a forced broadcast OOMs the
     driver at 100x; regression class: verify_pairs at 370k docs, round-2
-    canonical/winner/linkage fixes, round-3 enrichment.propagate_barcodes).
+    canonical/winner fixes).
 
     Allowed ResolvedHints: the O(numPartitions) _pid/_offset map inside
     assign_sequential_ids and the 1-row _mu/_sd scalar-stats frame in
@@ -282,18 +282,11 @@ def test_no_forced_broadcast_of_corpus_sides_across_operators(spark):
     )
     from product_deduplication_spark.operators.enrichment import (
         agg_images_bulk_reference_shape,
-        barcode_bulk_rows,
-        propagate_barcodes,
     )
     from product_deduplication_spark.operators.winner import score_entities
 
     rel = spark.createDataFrame(
         [("w1", "l1")], "winner_entity_uuid string, loser_entity_uuid string"
-    )
-    barcodes = spark.createDataFrame(
-        [("w1", "111", "PRODUCT_IDENTIFIER_TYPE_PLU"),
-         ("l1", "2222222", "PRODUCT_IDENTIFIER_TYPE_GTIN")],
-        "entity_uuid string, gtins string, gtin_types string",
     )
     imgs = spark.createDataFrame(
         [("l1", "http://img/a.jpg", "IMAGE_SOURCE_CATALOG")],
@@ -324,13 +317,10 @@ def test_no_forced_broadcast_of_corpus_sides_across_operators(spark):
         + ", scans int, correct_scans int, incorrect_scans int, linked_products int",
     )
 
-    propagated = propagate_barcodes(rel, barcodes)
     boot_cat, boot_links = bootstrap_canonical(groups)
     ups_cat, ups_links = upsert_canonical(catalog, links, groups)
     app_cat, app_links = append_missing_members(catalog, links, missing)
     outputs = {
-        "propagate_barcodes": propagated,
-        "barcode_bulk_rows": barcode_bulk_rows(propagated, barcodes),
         "agg_images_bulk": agg_images_bulk_reference_shape(rel, imgs, n_slots=1),
         "bootstrap_links": boot_links,
         "upsert_links": ups_links,

@@ -1,26 +1,7 @@
 from __future__ import annotations
 
-from product_deduplication_spark.datagen import generate_raw_catalog, generate_web_documents
-from product_deduplication_spark.sources.web_documents import (
-    WEB_DOCUMENTS_SCHEMA,
-    read_csv_catalog,
-    read_web_documents,
-    validate_web_documents,
-    write_csv,
-)
-
-
-def test_web_documents_roundtrip_and_validation(spark, tmp_path):
-    docs, _ = generate_web_documents(n_base_docs=40, seed=9)
-    p = str(tmp_path / "docs.parquet")
-    docs.to_parquet(p, index=False, coerce_timestamps="us")
-    df = read_web_documents(spark, p)
-    # nullability flags follow the parquet footer; names + types must match
-    assert [(f.name, f.dataType) for f in df.schema] == [
-        (f.name, f.dataType) for f in WEB_DOCUMENTS_SCHEMA
-    ]
-    checks = validate_web_documents(df)
-    assert checks == {"null_url": 0, "dup_url": 0, "empty_text": 0}
+from product_deduplication_spark.datagen import generate_raw_catalog
+from product_deduplication_spark.sources.web_documents import read_csv_catalog, write_csv
 
 
 def test_csv_roundtrip_with_header_and_name_normalization(spark, tmp_path):

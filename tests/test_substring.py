@@ -88,22 +88,3 @@ def test_boilerplate_heavy_containment_still_found(spark):
     id2url = {r["doc_id"]: r["url"] for r in sdf.select("doc_id", "url").collect()}
     found = {(id2url[r["src"]], id2url[r["dst"]]) for r in edges}
     assert ("big", "small") in found, found
-
-
-def test_substring_hot_stats_reports_fully_hot_docs(spark):
-    """Docs whose every fingerprint is hot are surfaced as fully_hot=true
-    (no silent caps)."""
-    from product_deduplication_spark.operators.substring import substring_hot_stats
-
-    boiler = " ".join(f"common{i % 40}" for i in range(300))
-    rows = [(f"copy{i}", boiler) for i in range(20)]
-    rows.append(("unique", " ".join(f"rare{i}" for i in range(300))))
-    sdf = spark.createDataFrame(rows, "url string, text string").selectExpr(
-        "xxhash64(url) as doc_id", "url", "text"
-    )
-    cfg = DedupConfig(shuffle_partitions=8, bucket_cap=8)
-    stats = {r["node"]: r for r in substring_hot_stats(sdf, cfg).collect()}
-    id2url = {r["doc_id"]: r["url"] for r in sdf.select("doc_id", "url").collect()}
-    by_url = {id2url[k]: v for k, v in stats.items()}
-    assert by_url["copy0"]["fully_hot"] is True
-    assert by_url["unique"]["fully_hot"] is False

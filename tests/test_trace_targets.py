@@ -6,7 +6,8 @@
 catalog layer by replacing methods on the ``SnapshotCatalog`` instance. A
 refactor that renames or drops one of those would break traced runs only
 when they are next taken; this pins the names in the unit suite, together
-with the rest of the engine surface the two harnesses call.
+with the rest of the engine surface the two harnesses call, and checks that
+a run calls the function patched on the module of its entry point.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ from perfbench.workloads import BATCH_LAYERS, INCREMENTAL_LAYERS, IncrementalCat
 from product_deduplication_spark import pipeline
 from product_deduplication_spark.catalog import SnapshotCatalog
 from product_deduplication_spark.config import DedupConfig
+from product_deduplication_spark.datagen import generate_web_documents
 from product_deduplication_spark.functions.features import with_features
 from product_deduplication_spark.operators.connected_components import (
     assign_clusters_contracted,
@@ -77,3 +79,43 @@ def test_harness_calls_bind_to_the_engine():
     for fn, args, kwargs in calls:
         inspect.signature(fn).bind(*args, **kwargs)
     assert isinstance(cfg.min_doc_chars, int)
+
+
+def _record_calls(monkeypatch, module, attr) -> list:
+    """Replaces ``module.attr`` by a wrapper that records each call."""
+    calls = []
+    fn = getattr(module, attr)
+
+    def wrapper(*args, **kwargs):
+        calls.append(attr)
+        return fn(*args, **kwargs)
+
+    monkeypatch.setattr(module, attr, wrapper)
+    return calls
+
+
+def _docs_frame(spark, docs):
+    return spark.createDataFrame(docs[["url", "text"]])
+
+
+def test_run_dedup_calls_operators_patched_on_pipeline(spark, monkeypatch):
+    docs, _ = generate_web_documents(n_base_docs=12, seed=5)
+    calls = _record_calls(monkeypatch, pipeline, "verify_pairs")
+    res = pipeline.run_dedup(_docs_frame(spark, docs), DedupConfig(shuffle_partitions=4))
+    res.release()
+    assert calls == ["verify_pairs"]
+
+
+def test_delta_batch_calls_operators_patched_on_incremental(spark, monkeypatch, tmp_path):
+    """The stage body is shared with ``run_dedup``, yet a delta batch calls
+    the operators bound on ``streaming.incremental``, where the tracer
+    patches its delta layers."""
+    docs, _ = generate_web_documents(n_base_docs=12, seed=6)
+    cfg = DedupConfig(shuffle_partitions=4)
+    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
+    half = len(docs) // 2
+    incremental.incremental_dedup(spark, cat, _docs_frame(spark, docs.iloc[:half]), cfg)
+    verify = _record_calls(monkeypatch, incremental, "verify_pairs")
+    cc = _record_calls(monkeypatch, incremental, "assign_clusters")
+    incremental.incremental_dedup(spark, cat, _docs_frame(spark, docs.iloc[half:]), cfg)
+    assert verify == ["verify_pairs"] and cc == ["assign_clusters"]

@@ -14,8 +14,6 @@ from product_deduplication_spark.operators.canonical import (
 )
 from product_deduplication_spark.operators.winner import (
     ATTRIBUTE_WEIGHTS,
-    add_entity_names,
-    reselect_winners,
     score_entities,
 )
 
@@ -50,31 +48,6 @@ def test_score_entities_weights_and_guard(score_df):
     assert scores["e_bare"] == pytest.approx(0.0 + 0.2 * 0.5 + 0.2 * -1.0, abs=1e-6)
     # e_guard: scans<=3 -> rate 0 despite 3 incorrect; z=0
     assert scores["e_guard"] == pytest.approx(0.6 * 1.0, abs=1e-6)
-
-
-def test_reselect_winners_promotes_best_and_fills_missing(spark, score_df):
-    rel = spark.createDataFrame(
-        [("e_bare", "e_full"), ("e_bare", "e_missing")],
-        "winner_entity_uuid string, loser_entity_uuid string",
-    )
-    out = {
-        (r["winner_entity_uuid"], r["loser_entity_uuid"])
-        for r in reselect_winners(rel, score_df).collect()
-    }
-    # e_full has the top score -> becomes winner of the whole group;
-    # e_missing (no score row) is treated as score 0 (reference :105)
-    assert out == {("e_full", "e_bare"), ("e_full", "e_missing")}
-
-
-def test_add_entity_names(spark, score_df):
-    rel = spark.createDataFrame(
-        [("w1", "l1")], "winner_entity_uuid string, loser_entity_uuid string"
-    )
-    names = spark.createDataFrame(
-        [("w1", "Winner Name"), ("l1", "Loser Name")], "entity_uuid string, name string"
-    )
-    row = add_entity_names(rel, names).collect()[0]
-    assert (row["winner_name"], row["loser_name"]) == ("Winner Name", "Loser Name")
 
 
 def test_assign_sequential_ids_gap_free_and_ordered(spark):
